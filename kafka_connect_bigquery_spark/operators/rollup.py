@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kafka_connect_bigquery_spark.sinks.warehouse import TableSpec, WarehouseError
+
 _Q = 10_000  # 1e-4 quanta, matches queries._Q
 
 
@@ -118,6 +120,18 @@ def apply_rollup_delta(
     return out.filter(F.col(count_measure) > 0)
 
 
+def cdc_span(warehouse, source: str, from_version: int, to_version: int, feed=None) -> DataFrame:
+    """The ``images="both"`` CDC span a maintainer applies: taken from
+    the shared ``feed`` (a ``ChangeFeed``, streaming/pipeline.py) when
+    given, read from the warehouse otherwise. Raises ``WarehouseError``
+    when the ``from_version`` snapshot has been pruned."""
+    if feed is not None:
+        return feed.changes(source, from_version, to_version)
+    return warehouse.read_changes(
+        source, from_version=from_version, to_version=to_version, images="both"
+    )
+
+
 class RollupMaintainer:
     """Keeps a materialized rollup table fresh against a bucketed
     source table by consuming the warehouse CDC feed — the IVM consumer
@@ -131,7 +145,14 @@ class RollupMaintainer:
     replayed idempotent merge contributes an empty row-diff, so
     refresh is replay-safe too. If the cursor's snapshot has been
     pruned (consumer lagged past snapshot_retention), refresh falls
-    back to a full rebuild — correct, just not incremental.
+    back to a full rebuild — correct, just not incremental. Any other
+    failure propagates: a silent rebuild would hide a broken delta path
+    behind O(source) work on every batch.
+
+    The CDC span comes from a shared ``ChangeFeed``
+    (streaming/pipeline.py) when the caller passes one — the streaming
+    MERGE pipeline does, so its maintainers pay one CDC pass per batch —
+    and from ``Warehouse.read_changes`` otherwise.
     """
 
     CURSOR_KEY = "rollup_applied_version"
@@ -156,9 +177,11 @@ class RollupMaintainer:
     def _rebuild(self) -> DataFrame:
         return build_rollup(self.wh.read(self.source), self.keys, self.measures)
 
-    def refresh(self) -> int:
+    def refresh(self, feed=None) -> int:
         """Bring the rollup up to the source's current generation.
-        Returns the number of source versions applied (0 = current)."""
+        Returns the number of source versions applied (0 = current).
+        ``feed``: an optional ``ChangeFeed`` shared with the other
+        maintainers of the source."""
         cur = self.wh.layout_meta(self.source).get("generation")
         if cur is None:
             raise ValueError(
@@ -173,24 +196,24 @@ class RollupMaintainer:
             out = self._rebuild()
         else:
             try:
-                changes = self.wh.read_changes(
-                    self.source, from_version=int(last), images="both"
-                )
-                delta = rollup_delta(changes, self.keys, self.measures)
-                out = apply_rollup_delta(
-                    self.wh.read(self.table),
-                    delta,
-                    self.keys,
-                    count_measure=self.count_measure,
-                )
-            except Exception:
-                # cursor snapshot pruned (lagged past retention) or the
-                # rollup table is missing — rebuild from the source
+                changes = cdc_span(self.wh, self.source, int(last), cur, feed)
+            except WarehouseError:
+                # cursor snapshot pruned (lagged past retention)
                 out = self._rebuild()
-        # the source snapshot is immutable, so materialize (one pass)
-        # before the overwrite drops the old rollup files out from
-        # under the lazily-read plan
-        out = out.localCheckpoint(eager=True)
-        self.wh.overwrite(out, self.table)
+            else:
+                delta = rollup_delta(changes, self.keys, self.measures)
+                # project the stored state onto keys + measures: rollups
+                # written by older releases carry an ingestion-date column
+                stored = self.wh.read(self.table).select(
+                    *self.keys, *self.measures
+                )
+                out = apply_rollup_delta(
+                    stored, delta, self.keys, count_measure=self.count_measure
+                )
+        # no materialization first: overwrite runs the plan once, into a
+        # scratch dir, before it swaps out (and retains) the old rollup
+        # files the plan reads. Explicit NONE grain: a partition column
+        # would become a phantom measure of the next refresh's delta merge
+        self.wh.overwrite(out, self.table, TableSpec(partition_grain="NONE"))
         self.wh.set_table_property(self.table, self.CURSOR_KEY, cur)
         return cur - (int(last) if last is not None else cur - 1)

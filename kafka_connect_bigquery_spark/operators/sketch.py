@@ -24,6 +24,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kafka_connect_bigquery_spark.operators.rollup import cdc_span
+from kafka_connect_bigquery_spark.sinks.warehouse import TableSpec, WarehouseError
+
 DEPTH = 4
 WIDTH = 256
 
@@ -862,7 +865,11 @@ class SketchMaintainer:
     ``kmv_maintain_grouped`` (additions merge at CDC cost; groups that
     lost a contribution rebuild from only the affected groups). A
     pruned cursor snapshot (consumer lagged past snapshot_retention)
-    falls back to a full rebuild — correct, just not incremental.
+    falls back to a full rebuild — correct, just not incremental; any
+    other failure propagates. Like the rollup maintainer, ``refresh``
+    takes the CDC span from a shared ``ChangeFeed`` when given one
+    (the streaming pipeline passes one per micro-batch) and reads it
+    itself otherwise.
     Maintained state is provably equal to a direct rebuild (the
     operator-level tests pin it with poisoned-current checks).
     """
@@ -917,9 +924,11 @@ class SketchMaintainer:
             )
         return kmv_build_grouped(src, self.col, self.group_cols, k=self.k)
 
-    def refresh(self) -> int:
+    def refresh(self, feed=None) -> int:
         """Bring the sketch table up to the source's current generation.
-        Returns the number of source versions applied (0 = current)."""
+        Returns the number of source versions applied (0 = current).
+        ``feed``: an optional ``ChangeFeed`` shared with the other
+        maintainers of the source."""
         cur = self.wh.layout_meta(self.source).get("generation")
         if cur is None:
             raise ValueError(
@@ -934,9 +943,11 @@ class SketchMaintainer:
             out = self._rebuild()
         else:
             try:
-                changes = self.wh.read_changes(
-                    self.source, from_version=int(last), images="both"
-                )
+                changes = cdc_span(self.wh, self.source, int(last), cur, feed)
+            except WarehouseError:
+                # cursor snapshot pruned (lagged past retention)
+                out = self._rebuild()
+            else:
                 stored = self.wh.read(self.table)
                 current = self.wh.read(self.source)
                 if self.kind == "hll":
@@ -961,16 +972,10 @@ class SketchMaintainer:
                         stored, changes, self.col, self.group_cols,
                         current=current, k=self.k,
                     )
-            except Exception:
-                # cursor snapshot pruned or sketch table missing
-                out = self._rebuild()
-        # materialize before the overwrite drops the old sketch files
-        # out from under the lazily-read plan
-        out = out.localCheckpoint(eager=True)
-        from kafka_connect_bigquery_spark.sinks.warehouse import TableSpec
-
-        # explicit NONE grain: a register table must not grow an
-        # ingestion-time partition column
+        # no materialization first: overwrite runs the plan once, into a
+        # scratch dir, before it swaps out (and retains) the old sketch
+        # files the plan reads. Explicit NONE grain: a register table
+        # must not grow an ingestion-time partition column
         self.wh.overwrite(out, self.table, TableSpec(partition_grain="NONE"))
         self.wh.set_table_property(self.table, self.CURSOR_KEY, cur)
         return cur - (int(last) if last is not None else cur - 1)

@@ -116,6 +116,24 @@ _NANOS_CONF_SESSIONS: "weakref.WeakSet" = weakref.WeakSet()
 _TABLE_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
+def _reset_debugging_flag_cache() -> bool:
+    """Drop pyspark's cached ``dataFrameDebugging.enabled`` flag so the
+    next wrapped API call re-reads the conf. pyspark caches the flag at
+    the first wrapped call, and a session built without ``get_spark()``
+    may have warmed that cache True before reaching the read boundary.
+
+    The cache is the private ``pyspark.errors.utils._enable_debugging_cache``
+    (verified on PySpark 4.1.2; re-check on upgrade). If a release
+    renames it, this returns False instead of creating a dead attribute;
+    tests/test_tooling.py pins that the attribute still exists."""
+    import pyspark.errors.utils as _eu
+
+    if not hasattr(_eu, "_enable_debugging_cache"):
+        return False
+    _eu._enable_debugging_cache = None
+    return True
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one testdata table, normalizing nanosecond-precision parquet
     timestamps to Spark's microsecond TimestampType.
@@ -151,13 +169,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
             spark.conf.set(
                 "spark.python.sql.dataFrameDebugging.enabled", "false"
             )
-            # pyspark caches the flag at the first wrapped API call; a
-            # plain harness session may have warmed that cache True
-            # before reaching this read boundary — drop it so the next
-            # call re-reads the conf just set above.
-            import pyspark.errors.utils as _eu
-
-            _eu._enable_debugging_cache = None
+            _reset_debugging_flag_cache()
         except Exception:  # pragma: no cover - conf is runtime-settable in 4.x
             pass
         _NANOS_CONF_SESSIONS.add(spark)

@@ -62,6 +62,17 @@ _GRAIN_EXPR = {
 }
 
 
+def _manifest_schema(meta: dict) -> T.StructType | None:
+    """The logical schema a layout manifest (or snapshot) records, or
+    None for manifests written before schemas were persisted."""
+    schema_json = meta.get("schema")
+    if not schema_json:
+        return None
+    import json
+
+    return T.StructType.fromJson(json.loads(schema_json))
+
+
 class WarehouseError(RuntimeError):
     pass
 
@@ -760,17 +771,13 @@ class Warehouse:
             files.append(p)
             rels[p] = rel
         if not files:
-            schema_json = meta_at["schema"]
-            if schema_json is None:
+            stored = _manifest_schema(meta_at)
+            if stored is None:
                 raise WarehouseError(
                     f"empty span of {table} predates stored schemas — "
                     "cannot derive a schema"
                 )
-            import json as _json
-
-            return self.spark.createDataFrame(
-                [], T.StructType.fromJson(_json.loads(schema_json))
-            )
+            return self.spark.createDataFrame([], stored)
         return self._read_files_with_deletes(table, files, meta_at, rels=rels)
 
     def clone_table(
@@ -1021,39 +1028,57 @@ class Warehouse:
             # back w=NULL everywhere). An explicit read schema makes
             # Spark fill footer-missing columns with NULLs per file and
             # read present ones properly — no footer merging needed.
-            schema_json = meta.get("schema")
-            if schema_json:
-                import json
-
-                stored = T.StructType.fromJson(json.loads(schema_json))
+            stored = _manifest_schema(meta)
+            if stored is not None:
                 return self.spark.read.schema(stored).parquet(self.path(table))
             return self.spark.read.parquet(self.path(table))
         if not gens:
             # every key deleted: the table still exists with a schema
             # (persisted in the manifest since the all-tombstone-first-
             # batch fix) — read as empty, like a truncated table
-            schema_json = meta.get("schema")
-            if schema_json is not None:
-                import json
-
-                return self.spark.createDataFrame(
-                    [], T.StructType.fromJson(json.loads(schema_json))
-                )
+            stored = _manifest_schema(meta)
+            if stored is not None:
+                return self.spark.createDataFrame([], stored)
             raise WarehouseError(
                 f"table {table} has no live buckets (every key deleted) "
                 "and predates manifest schemas — cannot derive a schema"
             )
         paths = [self._bucket_gen_dir(table, b, g) for b, g in gens.items()]
-        # mergeSchema: after a merge-path schema evolution only the
-        # touched buckets carry the new columns on disk; the union view
-        # fills the rest with NULLs (no O(table) rewrite at evolve time).
-        # Then conform to the manifest schema: evolution is a metadata
-        # commit independent of row content (SchemaManager.java:264-281),
-        # so a column added by a batch with zero surviving rows exists in
-        # NO footer — only the manifest knows it (fuzz-found: tombstone-
-        # only evolving batch for absent keys lost the new column).
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        return self._conform_to_stored(df, meta)
+        return self._read_stored(paths, meta)
+
+    def _read_stored(
+        self, paths: list[str], meta: dict, *, base_path: str | None = None
+    ) -> DataFrame:
+        """Read data files or bucket generation dirs as the manifest's
+        logical schema — the one read shape every bucketed and
+        file-restricted read goes through.
+
+        After a merge-path schema evolution only the touched buckets
+        carry the new columns on disk (no O(table) rewrite at evolve
+        time), and evolution is a metadata commit independent of row
+        content (SchemaManager.java:264-281): a column added by a batch
+        with zero surviving rows exists in NO footer, only in the
+        manifest (fuzz-found: tombstone-only evolving batch for absent
+        keys lost the new column). Reading with the manifest schema as
+        the explicit read schema makes Spark fill footer-missing
+        columns and nested subfields with NULLs per file — the same
+        rows a ``mergeSchema`` footer merge plus conform produces, but
+        without the Spark job that merges the footers. This is safe
+        because the manifest schema only ever grows additively
+        (``unionize`` never widens a type), so every footer type equals
+        the manifest type. Manifests written before schemas were
+        persisted fall back to the footer merge. Either way the result
+        is conformed to the manifest's column order (partition columns
+        discovered from ``base_path`` would otherwise trail)."""
+        reader = self.spark.read
+        if base_path is not None:
+            reader = reader.option("basePath", base_path)
+        stored = _manifest_schema(meta)
+        if stored is not None:
+            reader = reader.schema(stored)
+        else:
+            reader = reader.option("mergeSchema", "true")
+        return self._conform_to_stored(reader.parquet(*paths), meta)
 
     # -- deferred deletes (merge-on-read, flat tables) --------------------
     def delete_where(
@@ -1092,7 +1117,6 @@ class Warehouse:
         Returns the delete id. The predicate is validated against the
         stored schema eagerly, so a typo fails here, not at first read.
         """
-        import json as _json
         import time as _time
 
         if mode not in ("deferred", "rewrite"):
@@ -1106,11 +1130,9 @@ class Warehouse:
                 "delete_where targets flat tables; bucketed-MERGE tables "
                 "delete via tombstones (merge with null values)"
             )
-        schema_json = meta.get("schema")
-        if schema_json:
-            probe = self.spark.createDataFrame(
-                [], T.StructType.fromJson(_json.loads(schema_json))
-            )
+        stored = _manifest_schema(meta)
+        if stored is not None:
+            probe = self.spark.createDataFrame([], stored)
             probe.filter(F.expr(predicate))  # analysis-time validation
         files = [
             os.path.relpath(p, tdir) for p in self._data_files(tdir)
@@ -1160,8 +1182,6 @@ class Warehouse:
         retention policy — after which versions whose files lived only
         in dropped layers fail loudly here with the missing-file count
         rather than silently returning partial rows."""
-        import json as _json
-
         recs = self._read_oplog(table)
         if not recs:
             raise WarehouseError(
@@ -1190,15 +1210,13 @@ class Warehouse:
             "deferred_deletes": state.get("deletes") or [],
         }
         if not files:
-            schema_json = meta_at["schema"]
-            if schema_json is None:
+            stored = _manifest_schema(meta_at)
+            if stored is None:
                 raise WarehouseError(
                     f"version {version} of {table} is empty and predates "
                     "stored schemas — cannot derive a schema"
                 )
-            return self.spark.createDataFrame(
-                [], T.StructType.fromJson(_json.loads(schema_json))
-            )
+            return self.spark.createDataFrame([], stored)
         return self._read_files_with_deletes(table, files, meta_at, rels=rels)
 
     def _read_files_with_deletes(
@@ -1237,12 +1255,7 @@ class Warehouse:
             groups.setdefault((key, base), []).append(p)
         parts = []
         for key, base in sorted(groups):
-            part = self._conform_to_stored(
-                self.spark.read.option("basePath", base)
-                .option("mergeSchema", "true")
-                .parquet(*groups[(key, base)]),
-                meta,
-            )
+            part = self._read_stored(groups[(key, base)], meta, base_path=base)
             for i in key:
                 part = part.filter(
                     ~F.coalesce(
@@ -1384,12 +1397,9 @@ class Warehouse:
         first. Columns present in footers but absent from the manifest
         (none in practice — commit-time union is additive) are preserved
         at the tail."""
-        schema_json = meta.get("schema")
-        if not schema_json:
+        stored = _manifest_schema(meta)
+        if stored is None:
             return df
-        import json
-
-        stored = T.StructType.fromJson(json.loads(schema_json))
         have = {f.name: f.dataType for f in df.schema.fields}
         stored_names = {f.name for f in stored.fields}
         cols = [
@@ -1425,7 +1435,13 @@ class Warehouse:
         generation moved, so only those buckets are read at either
         version — change detection cost follows the write rate, not the
         table size (the Delta/Iceberg incremental-scan idea on the
-        one-file log).
+        one-file log). Both sides read with the newer manifest's schema
+        (``_read_stored``), so building the feed starts no Spark job.
+
+        Several consumers of one span should share one frame: the
+        streaming pipeline's ``ChangeFeed`` (streaming/pipeline.py)
+        builds this feed once per micro-batch and caches it for every
+        IVM maintainer of the table.
         """
         old = self._snapshot_meta(table, from_version)
         new = (
@@ -1446,49 +1462,38 @@ class Warehouse:
             ]
 
         n_paths, o_paths = _side_paths(ng), _side_paths(og)
-        n_df = (
-            self.spark.read.option("mergeSchema", "true").parquet(*n_paths)
-            if n_paths
-            else None
-        )
-        o_df = (
-            self.spark.read.option("mergeSchema", "true").parquet(*o_paths)
-            if o_paths
-            else None
-        )
+        # both sides read as the newer manifest's schema: evolution is
+        # additive, so it names every column either side carries and the
+        # row compare sees one shape (no footer merge, no Spark job)
+        schema_meta = new if new.get("schema") else old
+        n_df = self._read_stored(n_paths, schema_meta) if n_paths else None
+        o_df = self._read_stored(o_paths, schema_meta) if o_paths else None
         # An empty side takes its schema from the other side, never from
         # read() — a snapshot whose generations map is empty (a commit
         # that deleted every key) has no live buckets to read, and the
         # non-empty side's schema already includes columns added by
         # later schema evolution.
         if n_df is None and o_df is None:
-            # no changed buckets at either version — derive a schema from
-            # any live generation (or the manifest schema when both
-            # states are fully emptied) just to shape the empty result
-            any_gens = ng or og
-            if not any_gens:
-                import json as _json
-
-                schema_json = new.get("schema") or old.get("schema")
-                if schema_json is None:
+            # no changed buckets at either version: an empty feed shaped
+            # by the manifest schema (or, for manifests predating stored
+            # schemas, by any live generation's footer)
+            schema = _manifest_schema(schema_meta)
+            if schema is None:
+                any_gens = ng or og
+                if not any_gens:
                     raise WarehouseError(
                         f"no data files at either version of {table} to "
                         "derive a CDC schema from"
                     )
-                schema = T.StructType.fromJson(_json.loads(schema_json))
-                return (
-                    self.spark.createDataFrame([], schema)
-                    .withColumn("_change_type", F.lit("insert"))
-                    .select("_change_type", *[f.name for f in schema.fields])
-                )
-            probe = self.spark.read.parquet(
-                self._bucket_gen_dir(table, *next(iter(any_gens.items())))
+                schema = self.spark.read.parquet(
+                    self._bucket_gen_dir(table, *next(iter(any_gens.items())))
+                ).schema
+            return (
+                self.spark.createDataFrame([], schema)
+                .withColumn("_change_type", F.lit("insert"))
+                .select("_change_type", *[f.name for f in schema.fields])
             )
-            # fresh lineage-free frames: sharing one plan between the two
-            # join sides trips Spark's ambiguous-self-join detection
-            n_df = self.spark.createDataFrame([], probe.schema)
-            o_df = self.spark.createDataFrame([], probe.schema)
-        elif n_df is None:
+        if n_df is None:
             n_df = self.spark.createDataFrame([], o_df.schema)
         elif o_df is None:
             o_df = self.spark.createDataFrame([], n_df.schema)
@@ -2066,10 +2071,9 @@ class Warehouse:
             )
         if not files:
             return None
-        reader = self.spark.read.option("mergeSchema", "true")
-        if not bucketed:
-            reader = reader.option("basePath", self.path(table))
-        return reader.parquet(*files)
+        return self._read_stored(
+            files, meta, base_path=None if bucketed else self.path(table)
+        )
 
     def _sketch_build(
         self, table: str, cols: list[str], p: int, files: list[str] | None
@@ -2436,11 +2440,10 @@ class Warehouse:
         if not keep:
             return self.read(table).limit(0).filter(pred)
         if layout.get("generations") is not None:
-            # bucketed survivors: same read shape as read() — merged
-            # footers + manifest-schema conform (generation paths carry
-            # no Hive columns and reject a shared basePath; probed)
-            sub = self.spark.read.option("mergeSchema", "true").parquet(*keep)
-            return self._conform_to_stored(sub, layout).filter(pred)
+            # bucketed survivors: same read shape as read() (generation
+            # paths carry no Hive columns and reject a shared basePath;
+            # probed)
+            return self._read_stored(keep, layout).filter(pred)
         return self._read_files_with_deletes(table, keep, layout).filter(pred)
 
     def approx_distinct(
@@ -2959,10 +2962,7 @@ class Warehouse:
         elif not keep:
             sub = self.read(table).limit(0)
         elif layout.get("generations") is not None:
-            sub = self._conform_to_stored(
-                self.spark.read.option("mergeSchema", "true").parquet(*keep),
-                layout,
-            )
+            sub = self._read_stored(keep, layout)
         else:
             sub = self._read_files_with_deletes(table, keep, layout)
         if where is not None:
@@ -3422,10 +3422,7 @@ class Warehouse:
         if not keep:
             return self.read(table).limit(0)
         if layout.get("generations") is not None:
-            return self._conform_to_stored(
-                self.spark.read.option("mergeSchema", "true").parquet(*keep),
-                layout,
-            )
+            return self._read_stored(keep, layout)
         return self._read_files_with_deletes(table, keep, layout)
 
     def read_nearest_many(
@@ -3499,10 +3496,7 @@ class Warehouse:
         elif not keep:
             sub = self.read(table).limit(0)
         elif layout.get("generations") is not None:
-            sub = self._conform_to_stored(
-                self.spark.read.option("mergeSchema", "true").parquet(*keep),
-                layout,
-            )
+            sub = self._read_stored(keep, layout)
         else:
             sub = self._read_files_with_deletes(table, keep, layout)
         if where is not None:
@@ -3748,11 +3742,10 @@ class Warehouse:
         if not keep:
             return self.read(table).limit(0).filter(pred)
         if layout.get("generations") is not None:
-            # bucketed survivors: merged footers + manifest-schema
-            # conform, the same read shape as read() (generation paths
-            # carry no Hive columns and reject a shared basePath)
-            sub = self.spark.read.option("mergeSchema", "true").parquet(*keep)
-            return self._conform_to_stored(sub, layout).filter(pred)
+            # bucketed survivors: the same read shape as read()
+            # (generation paths carry no Hive columns and reject a
+            # shared basePath)
+            return self._read_stored(keep, layout).filter(pred)
         # basePath keeps Hive-style partition columns visible when
         # individual files inside partition dirs are listed explicitly;
         # conform so the result's schema equals read(table)'s even when
@@ -4463,15 +4456,12 @@ class Warehouse:
             if str(b) in gens
         ]
         if dest_paths:
-            # mergeSchema + manifest conform: touched buckets may carry
+            # manifest-schema read: touched buckets may carry
             # heterogeneous footers after an evolution (and an evolved
             # column with zero surviving rows lives ONLY in the
             # manifest) — the merge must see the full logical schema or
             # its output files would shrink it for these buckets
-            dest_touched = self._conform_to_stored(
-                self.spark.read.option("mergeSchema", "true").parquet(*dest_paths),
-                meta,
-            )
+            dest_touched = self._read_stored(dest_paths, meta)
         else:
             dest_touched = None
         batch_t = batch.drop("__bucket")
@@ -4492,11 +4482,8 @@ class Warehouse:
             # an evolved column would silently shrink the table schema
             # (fuzz-found: all-tombstone evolving first batch, then a
             # plain batch)
-            stored_schema_json = meta.get("schema")
-            if stored_schema_json is not None:
-                import json as _json
-
-                stored = T.StructType.fromJson(_json.loads(stored_schema_json))
+            stored = _manifest_schema(meta)
+            if stored is not None:
                 empty_dest = self.spark.createDataFrame([], stored)
                 _, batch_t = self._align_for_merge(
                     empty_dest,
@@ -4577,10 +4564,7 @@ class Warehouse:
             # conform so the compacted files CARRY manifest-only evolved
             # columns (self-healing: after compaction the footers and
             # the logical schema agree again)
-            df = self._conform_to_stored(
-                self.spark.read.option("mergeSchema", "true").parquet(*paths),
-                meta,
-            )
+            df = self._read_stored(paths, meta)
         else:
             df = self.read(table)
         n_rows = df.count()
@@ -4976,9 +4960,7 @@ class Warehouse:
         n_buckets = int(meta["key_bucket_count"])
         base_gen = int(meta.get("generation", -1))
         paths = [self._bucket_gen_dir(table, str(b), gens[str(b)]) for b in plan]
-        df = self._conform_to_stored(
-            self.spark.read.option("mergeSchema", "true").parquet(*paths), meta
-        )
+        df = self._read_stored(paths, meta)
         bucket_expr = F.pmod(
             F.hash(*[F.col(c) for c in key_cols]), F.lit(n_buckets)
         )
@@ -5177,8 +5159,8 @@ def _conform(col: F.Column, src: T.DataType, dst: T.DataType) -> F.Column:
 
 def _align_to(df: DataFrame, target: T.StructType) -> DataFrame:
     """Project df onto the evolved schema: missing fields -> NULL,
-    order normalized (parquet handles the stored side via mergeSchema-
-    style evolution on read)."""
+    order normalized (the stored side is read with the manifest schema,
+    see ``Warehouse._read_stored``)."""
     cols = []
     src_types = {f.name: f.dataType for f in df.schema.fields}
     for f in target.fields:

@@ -66,6 +66,37 @@ def retry_with_jitter(fn, retries: int, wait_ms: int, *, classify=None, sleep=ti
 CORRUPT_COL = "_corrupt_record"
 
 
+class ChangeFeed:
+    """One micro-batch's CDC feed, shared by the IVM maintainers of a
+    table. ``changes(source, from_version, to_version)`` builds
+    ``Warehouse.read_changes(..., images="both")`` once per span and
+    persists it lazily: the first maintainer's refresh computes the
+    manifest-diff join inside its own job and fills the cache, and the
+    others read the cached rows. Maintainers attached to one table
+    share a cursor in steady state, so one batch costs one CDC pass
+    instead of one per maintainer. ``release()`` unpersists every span;
+    ``SinkPipeline.merge_batch`` calls it when the batch ends."""
+
+    def __init__(self, warehouse: Warehouse) -> None:
+        self.warehouse = warehouse
+        self._frames: dict[tuple[str, int, int], DataFrame] = {}
+
+    def changes(self, source: str, from_version: int, to_version: int) -> DataFrame:
+        key = (source, int(from_version), int(to_version))
+        if key not in self._frames:
+            self._frames[key] = self.warehouse.read_changes(
+                source,
+                from_version=key[1],
+                to_version=key[2],
+                images="both",
+            ).persist()
+        return self._frames[key]
+
+    def release(self) -> None:
+        while self._frames:
+            self._frames.popitem()[1].unpersist()
+
+
 def _releases_batch_caches(fn):
     """Handler decorator: unpersist the frames convert() cached for the
     strict/DLQ malformed probe once the handler (and its write) is done,
@@ -125,10 +156,11 @@ class SinkPipeline:
     # batch's own schema for table creation/evolution.
     schema_retriever: object = None
     table_specs: dict[str, TableSpec] = dc_field(default_factory=dict)
-    # IVM consumers (operators/rollup.py:RollupMaintainer) per
-    # destination table: after each micro-batch MERGE commits, its
-    # rollups catch up through the CDC feed (cursor-tracked, so a crash
-    # between merge and refresh loses nothing — next batch covers both)
+    # IVM consumers (operators/rollup.py:RollupMaintainer,
+    # operators/sketch.py:SketchMaintainer) per destination table: after
+    # each micro-batch MERGE commits, they catch up one at a time
+    # through one shared ChangeFeed (cursor-tracked, so a crash between
+    # merge and refresh loses nothing — next batch covers both)
     rollup_maintainers: dict[str, list] = dc_field(default_factory=dict)
     dedupe_by_offset: bool = True
     _batch_counter: int = 0
@@ -136,7 +168,8 @@ class SinkPipeline:
     # the batch handlers release them after their write
     _persisted: list = dc_field(default_factory=list)
     # A3 batch counters (MergeBatches.java:146-167,305-349): per-batch
-    # row/tombstone counts observed on the running plan, no extra pass.
+    # row/tombstone counts observed on the running plan, no extra pass
+    # (append path); per-phase wall seconds on the upsert path
     last_metrics: dict = dc_field(default_factory=dict)
 
     def __post_init__(self) -> None:
@@ -380,7 +413,24 @@ class SinkPipeline:
     def merge_batch(self, batch: DataFrame, batch_id: int, key_cols: list[str]) -> None:
         """foreachBatch handler for upsert/delete mode (§3.2): dedup to
         newest per key happens inside the MERGE operators; tombstones are
-        records with null value."""
+        records with null value.
+
+        After each table's MERGE its maintainers refresh one at a time
+        over one shared :class:`ChangeFeed`. ``last_metrics`` then holds
+        ``batch_id``, ``merge_s`` (all tables) and, per maintained
+        table, ``refresh[<table>] = {"source", "seconds", "versions"}``
+        — wall clocks only, so reporting adds no Spark job."""
+        metrics: dict = {"batch_id": batch_id, "merge_s": 0.0, "refresh": {}}
+        feed = ChangeFeed(self.warehouse)
+        try:
+            self._merge_tables(batch, key_cols, feed, metrics)
+        finally:
+            feed.release()
+        self.last_metrics = metrics
+
+    def _merge_tables(
+        self, batch: DataFrame, key_cols: list[str], feed: ChangeFeed, metrics: dict
+    ) -> None:
         df = self.convert(batch)
         mode = (
             "upsert_delete"
@@ -399,6 +449,7 @@ class SinkPipeline:
             # (TableSpec.key_bucket_count) apply on the streaming path;
             # unconfigured tables keep the unpartitioned default.
             spec = self.table_specs.get(table, TableSpec(partition_grain="NONE"))
+            t0 = time.perf_counter()
             self._retried(
                 lambda shaped=shaped, table=table, spec=spec: self.warehouse.merge(
                     shaped,
@@ -414,8 +465,19 @@ class SinkPipeline:
                     allow_new_fields=self.config.allow_new_bigquery_fields,
                 )
             )
+            metrics["merge_s"] += time.perf_counter() - t0
+            # one at a time: concurrent refreshes would interleave their
+            # Spark jobs, and the first one fills the shared feed's cache
             for maintainer in self.rollup_maintainers.get(table, []):
-                self._retried(maintainer.refresh)
+                t0 = time.perf_counter()
+                versions = self._retried(
+                    lambda m=maintainer: m.refresh(feed=feed)
+                )
+                metrics["refresh"][maintainer.table] = {
+                    "source": table,
+                    "seconds": time.perf_counter() - t0,
+                    "versions": versions,
+                }
 
     # -- path 3: batch load ---------------------------------------------
     @_releases_batch_caches

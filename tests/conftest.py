@@ -5,7 +5,8 @@ import sys
 
 import pytest
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TESTS_DIR = os.path.dirname(os.path.abspath(__file__))
+REPO = os.path.dirname(TESTS_DIR)
 sys.path.insert(0, REPO)
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -33,7 +34,9 @@ def pytest_configure(config):
     )
 
 
-# Central slow list (node-id prefixes), chosen from a full-suite
+# Central slow list (test-id prefixes: the file relative to this
+# conftest's directory, then the in-file node id — see _gate_id), chosen
+# from a full-suite
 # --durations=0 run (plans/r14, 701 tests / 39:27 total): every entry
 # is a >=10 s soak/fuzz/endurance/multi-process re-run of behavior a
 # fast test in the same module already pins. Deliberately KEPT in the
@@ -43,38 +46,38 @@ def pytest_configure(config):
 # regression pin). Fast default ≈ 16 min vs 39 min full.
 _SLOW_PREFIXES = (
     # stateful fuzz machines (hypothesis soak)
-    "tests/test_warehouse_stateful.py",
-    "tests/test_flat_warehouse_stateful.py",
-    "tests/test_pretrain_stateful.py",
+    "test_warehouse_stateful.py",
+    "test_flat_warehouse_stateful.py",
+    "test_pretrain_stateful.py",
     # streaming restart soak
-    "tests/test_streaming_soak.py::test_streaming_soak_all_maintained",
+    "test_streaming_soak.py::test_streaming_soak_all_maintained",
     # multi-process race soaks (atomicity itself is pinned in-process)
-    "tests/test_bucketed_merge.py::test_two_process_writer_race",
-    "tests/test_flat_race.py::test_two_process_",
+    "test_bucketed_merge.py::test_two_process_writer_race",
+    "test_flat_race.py::test_two_process_",
     # pretrain pipeline endurance variants (tick==batch core pin stays)
-    "tests/test_pretrain_pipeline.py::test_materialize_survivors_folds_evictions",
-    "tests/test_pretrain_pipeline.py::test_incremental_tick_with_semantic_stage_equals_batch",
-    "tests/test_pretrain_pipeline.py::test_incremental_keep_best_with_embeddings_equals_batch",
-    "tests/test_pretrain_pipeline.py::test_incremental_keep_best_equals_batch_with_eviction",
-    "tests/test_pretrain_pipeline.py::test_torn_tick_",
-    "tests/test_pretrain_pipeline.py::test_materialize_survivors_no_spurious_recovery",
-    "tests/test_pretrain_pipeline.py::test_evicted_log_records_each_id_once",
+    "test_pretrain_pipeline.py::test_materialize_survivors_folds_evictions",
+    "test_pretrain_pipeline.py::test_incremental_tick_with_semantic_stage_equals_batch",
+    "test_pretrain_pipeline.py::test_incremental_keep_best_with_embeddings_equals_batch",
+    "test_pretrain_pipeline.py::test_incremental_keep_best_equals_batch_with_eviction",
+    "test_pretrain_pipeline.py::test_torn_tick_",
+    "test_pretrain_pipeline.py::test_materialize_survivors_no_spurious_recovery",
+    "test_pretrain_pipeline.py::test_evicted_log_records_each_id_once",
     # ANN warehouse lifecycle soaks (operator equivalence is pinned fast)
-    "tests/test_ann_index.py::test_flat_lifecycle_incremental_matches_brute_force",
-    "tests/test_ann_index.py::test_pq_probe_skips_files",
-    "tests/test_ann_index.py::test_pq_many_matches_per_query_probes",
-    "tests/test_ann_index.py::test_list_clustered_layout_actually_skips_files",
-    "tests/test_ann_index.py::test_pq_lifecycle_incremental_matches_operator",
-    "tests/test_ann_index.py::test_fuzz_probe_equals_brute_force_across_lifecycle",
-    "tests/test_ann_index.py::test_pq_compact_and_optimize_keep_codebooks_and_results",
-    "tests/test_ann_index.py::test_pq_bucketed_merge_lifecycle",
-    "tests/test_ann_index.py::test_pq_torn_codes_build_heals_on_next_refresh",
-    "tests/test_ann_index.py::test_read_nearest_many_matches_per_query_probes",
-    "tests/test_ann_index.py::test_pq_unencoded_file_falls_back_on_the_fly",
+    "test_ann_index.py::test_flat_lifecycle_incremental_matches_brute_force",
+    "test_ann_index.py::test_pq_probe_skips_files",
+    "test_ann_index.py::test_pq_many_matches_per_query_probes",
+    "test_ann_index.py::test_list_clustered_layout_actually_skips_files",
+    "test_ann_index.py::test_pq_lifecycle_incremental_matches_operator",
+    "test_ann_index.py::test_fuzz_probe_equals_brute_force_across_lifecycle",
+    "test_ann_index.py::test_pq_compact_and_optimize_keep_codebooks_and_results",
+    "test_ann_index.py::test_pq_bucketed_merge_lifecycle",
+    "test_ann_index.py::test_pq_torn_codes_build_heals_on_next_refresh",
+    "test_ann_index.py::test_read_nearest_many_matches_per_query_probes",
+    "test_ann_index.py::test_pq_unencoded_file_falls_back_on_the_fly",
     # other >=10 s soaks
-    "tests/test_bucketed_indexes.py::test_incremental_index_self_compacts",
-    "tests/test_merge_properties.py::test_upsert_batching_invariance",
-    "tests/test_bpe.py::test_learn_merges_from_dict_matches_python_replay",
+    "test_bucketed_indexes.py::test_incremental_index_self_compacts",
+    "test_merge_properties.py::test_upsert_batching_invariance",
+    "test_bpe.py::test_learn_merges_from_dict_matches_python_replay",
 )
 
 
@@ -85,11 +88,22 @@ def pytest_collection_modifyitems(config, items):
         reason="slow-marked (soak); set SPARK_GRAFT_FULL_TESTS=1 to run"
     )
     for item in items:
-        nid = item.nodeid
+        gid = _gate_id(item)
         if "slow" in item.keywords or any(
-            nid.startswith(p) for p in _SLOW_PREFIXES
+            gid.startswith(p) for p in _SLOW_PREFIXES
         ):
             item.add_marker(skip)
+
+
+def _gate_id(item) -> str:
+    """Rootdir-independent test id for the slow gate: the test file
+    relative to this conftest's directory plus the in-file part of the
+    node id. Node ids themselves are relative to pytest's rootdir, so
+    matching them would silently disable the gate when pytest runs from
+    another directory (e.g. ``cd tests && pytest .``)."""
+    rel = os.path.relpath(str(item.path), TESTS_DIR).replace(os.sep, "/")
+    _, sep, inner = item.nodeid.partition("::")
+    return rel + sep + inner
 
 
 @pytest.fixture(scope="session")

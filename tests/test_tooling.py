@@ -1,0 +1,42 @@
+"""Test-gate and session plumbing: the slow gate matches the same tests
+whatever directory pytest runs from, and the private pyspark debugging
+cache the read boundary resets still exists."""
+
+from __future__ import annotations
+
+import os
+from types import SimpleNamespace
+
+import conftest
+import pyspark.errors.utils as eu
+
+from kafka_connect_bigquery_spark import session
+
+
+def _item(path: str, nodeid: str):
+    return SimpleNamespace(path=path, nodeid=nodeid)
+
+
+def test_slow_gate_id_ignores_rootdir():
+    path = os.path.join(conftest.TESTS_DIR, "test_flat_race.py")
+    inner = "test_two_process_appends[3]"
+    from_repo = conftest._gate_id(_item(path, f"tests/test_flat_race.py::{inner}"))
+    from_tests = conftest._gate_id(_item(path, f"test_flat_race.py::{inner}"))
+    assert from_repo == from_tests == f"test_flat_race.py::{inner}"
+    assert from_repo.startswith(conftest._SLOW_PREFIXES)
+    module = conftest._gate_id(_item(path, "tests/test_flat_race.py"))
+    assert module == "test_flat_race.py"
+
+
+def test_debugging_cache_reset(monkeypatch):
+    # the private attribute the reset relies on (verified on PySpark 4.1.2)
+    assert hasattr(eu, "_enable_debugging_cache")
+    monkeypatch.setattr(eu, "_enable_debugging_cache", True)
+    assert session._reset_debugging_flag_cache() is True
+    assert eu._enable_debugging_cache is None
+
+
+def test_debugging_cache_reset_without_the_attribute(monkeypatch):
+    monkeypatch.delattr(eu, "_enable_debugging_cache")
+    assert session._reset_debugging_flag_cache() is False
+    assert not hasattr(eu, "_enable_debugging_cache")
