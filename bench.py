@@ -295,14 +295,21 @@ def main() -> None:
         (n for n in timings if n not in r01_present and n not in _PRIORITY_EXTRA),
         key=lambda n: -timings[n],
     )
+    widen_summary(summary, timings, extras, _SUMMARY_BUDGET)
+    print(json.dumps(summary, separators=(",", ":")), flush=True)
+
+
+def widen_summary(summary: dict, timings: dict, extras: list, budget: int) -> None:
+    """ADD ``extras`` (never remove or rename an entry) to
+    ``summary["queries"]`` in order while the compact JSON line stays
+    within ``budget`` chars. An entry that would overflow is skipped,
+    not a stop: a shorter later entry may still fit."""
     for n in extras:
         if n in summary["queries"]:
             continue
         summary["queries"][n] = round(timings[n], 3)
-        if len(json.dumps(summary, separators=(",", ":"))) > _SUMMARY_BUDGET:
+        if len(json.dumps(summary, separators=(",", ":"))) > budget:
             del summary["queries"][n]
-            break
-    print(json.dumps(summary, separators=(",", ":")), flush=True)
 
 
 if __name__ == "__main__":

@@ -280,6 +280,10 @@ def ngram_jaccard_pairs(
     Returns (id_a, id_b, inter_size, size_a, size_b, jaccard) with
     id_a < id_b and jaccard >= min_jaccard. Jaccard is computed from
     integer set sizes — exactly reproducible.
+
+    Shingle keys travel packed as BIGINTs only for ``n <= 8`` (128^9
+    overflows int64); wider shingles fall back to string keys — same
+    results, slower joins.
     """
     posts = _shingle_postings(df, id_col, text_col, n, max_doc_freq, pack=True)
     if block_col is not None:
@@ -470,7 +474,9 @@ def containment_pairs(
     (``inter*100 >= pct*min(size)``), so the emitted
     ``containment_pct`` is engine-exact. Returns (id_a, id_b,
     inter_size, size_a, size_b, containment_pct, jaccard_pct) with
-    id_a < id_b."""
+    id_a < id_b. Shingle keys travel packed as BIGINTs only for
+    ``n <= 8`` (128^9 overflows int64); wider shingles fall back to
+    string keys — same results, slower joins."""
     posts = _shingle_postings(df, id_col, text_col, n, max_doc_freq, pack=True)
     if block_col is not None:
         blocks = df.select(F.col(id_col).alias("doc"), F.col(block_col).alias("blk"))

@@ -40,7 +40,9 @@ def jaccard_rank(
     only postings of the query set join the corpus index, so cost
     follows |queries|·postings, never corpus². Returns
     (query_id, doc_id, jaccard, rank) with rank <= top_n, self-matches
-    excluded.
+    excluded. Shingle keys travel packed as BIGINTs only for ``n <= 8``
+    (128^9 overflows int64); wider shingles fall back to string keys —
+    same results, slower joins.
 
     Contracts (caller-asserted, not checked at runtime):
 

@@ -346,7 +346,7 @@ def materialize_survivors(
     earlier ``incremental_tick`` calls (``art["survivors"]`` etc.) are
     pinned to those versions and must be re-read afterwards, exactly
     as after a VACUUM in any snapshot table format."""
-    from kafka_connect_bigquery_spark.sinks.warehouse import TableSpec
+    from kafka_connect_bigquery_spark.sinks.warehouse import TableSpec, local_frame
 
     try:
         ev = wh.read(tables.evicted).select(id_col).localCheckpoint(eager=True)
@@ -374,7 +374,8 @@ def materialize_survivors(
     except Exception:  # unreachable in practice: evictions imply ticks
         return n
     wh.append(
-        wh.spark.createDataFrame(
+        local_frame(
+            wh.spark,
             [(last, t, int(wh.current_version(t))) for t in touched],
             "tick: long, state_table: string, version: long",
         ),
@@ -465,7 +466,7 @@ def incremental_tick(
     """
     from kafka_connect_bigquery_spark.functions.text import token_count
     from kafka_connect_bigquery_spark.operators.dedup import fingerprint
-    from kafka_connect_bigquery_spark.sinks.warehouse import TableSpec
+    from kafka_connect_bigquery_spark.sinks.warehouse import TableSpec, local_frame
 
     spec = TableSpec(partition_grain="NONE")
     # torn-tick recovery FIRST: if a prior tick crashed between state
@@ -615,7 +616,8 @@ def incremental_tick(
             )
             wh.append(
                 _stamp(
-                    wh.spark.createDataFrame(
+                    local_frame(
+                        wh.spark,
                         [(i, c) for i, c in enumerate(cents)],
                         "list_id: int, centroid: array<double>",
                     )
@@ -819,7 +821,8 @@ def incremental_tick(
     # crash anywhere above leaves the log without this tick, and the
     # next run's _recover_torn_tick rolls the stamped appends back.
     wh.append(
-        wh.spark.createDataFrame(
+        local_frame(
+            wh.spark,
             [
                 (int(to_version), t, int(wh.current_version(t)))
                 for t in tables.state_tables()

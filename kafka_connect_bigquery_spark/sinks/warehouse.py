@@ -73,6 +73,35 @@ def _manifest_schema(meta: dict) -> T.StructType | None:
     return T.StructType.fromJson(json.loads(schema_json))
 
 
+def local_frame(
+    spark: SparkSession, rows, schema: str | T.StructType
+) -> DataFrame:
+    """A DataFrame of driver-held ``rows`` (tuples, dicts or Rows) with
+    ``schema`` (a DDL string or a StructType), planned as a JVM
+    ``LocalRelation`` (physical ``LocalTableScan``).
+
+    Every driver-built frame in the sinks and pipelines goes through
+    here. ``spark.createDataFrame(<list>)`` would parallelize the rows
+    into a ``PythonRDD`` of ``defaultParallelism`` slices, and any job
+    reading it starts one Python worker evaluation per slice — a fixed
+    cost on every commit that grows with the core count, even when a
+    downstream ``coalesce(1)`` folds the slices into one task. Here the
+    rows cross to the JVM once as an Arrow table and no Python worker
+    runs. Values go through the schema's own ``toInternal``, the
+    conversion the list path applies, so timestamps (naive ones read as
+    local time), dates, decimals and nested values keep its meaning."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = T.DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*(struct.toInternal(r) for r in rows))) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema=struct)
+
+
 class WarehouseError(RuntimeError):
     pass
 
@@ -539,7 +568,8 @@ class Warehouse:
             import json as _json
 
             recs = self._read_oplog(table)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [
                     (
                         i,
@@ -576,7 +606,8 @@ class Warehouse:
                     sorted(int(b) for b, g in gens.items() if _gen_version(g) == v),
                 )
             )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "version: int, committed_at: double, key_bucket_count: int, "
             "live_buckets: int, rewrote_buckets: array<int>",
@@ -777,7 +808,7 @@ class Warehouse:
                     f"empty span of {table} predates stored schemas — "
                     "cannot derive a schema"
                 )
-            return self.spark.createDataFrame([], stored)
+            return local_frame(self.spark, [], stored)
         return self._read_files_with_deletes(table, files, meta_at, rels=rels)
 
     def clone_table(
@@ -1038,7 +1069,7 @@ class Warehouse:
             # batch fix) — read as empty, like a truncated table
             stored = _manifest_schema(meta)
             if stored is not None:
-                return self.spark.createDataFrame([], stored)
+                return local_frame(self.spark, [], stored)
             raise WarehouseError(
                 f"table {table} has no live buckets (every key deleted) "
                 "and predates manifest schemas — cannot derive a schema"
@@ -1132,7 +1163,7 @@ class Warehouse:
             )
         stored = _manifest_schema(meta)
         if stored is not None:
-            probe = self.spark.createDataFrame([], stored)
+            probe = local_frame(self.spark, [], stored)
             probe.filter(F.expr(predicate))  # analysis-time validation
         files = [
             os.path.relpath(p, tdir) for p in self._data_files(tdir)
@@ -1216,7 +1247,7 @@ class Warehouse:
                     f"version {version} of {table} is empty and predates "
                     "stored schemas — cannot derive a schema"
                 )
-            return self.spark.createDataFrame([], stored)
+            return local_frame(self.spark, [], stored)
         return self._read_files_with_deletes(table, files, meta_at, rels=rels)
 
     def _read_files_with_deletes(
@@ -1489,14 +1520,14 @@ class Warehouse:
                     self._bucket_gen_dir(table, *next(iter(any_gens.items())))
                 ).schema
             return (
-                self.spark.createDataFrame([], schema)
+                local_frame(self.spark, [], schema)
                 .withColumn("_change_type", F.lit("insert"))
                 .select("_change_type", *[f.name for f in schema.fields])
             )
         if n_df is None:
-            n_df = self.spark.createDataFrame([], o_df.schema)
+            n_df = local_frame(self.spark, [], o_df.schema)
         elif o_df is None:
-            o_df = self.spark.createDataFrame([], n_df.schema)
+            o_df = local_frame(self.spark, [], n_df.schema)
         # schema evolution between the versions: the older side may lack
         # newer columns — surface them as NULLs so the row compare works
         for f in n_df.schema.fields:
@@ -1913,7 +1944,7 @@ class Warehouse:
         )
         schema = "f string, c string, w int, bits long"
         markers = [(rel, c, -1, 0) for rel in sorted(new_rel) for c in bloomable]
-        out = self.spark.createDataFrame(markers, schema)
+        out = local_frame(self.spark, markers, schema)
         if rows is not None:
             out = rows.unionByName(out)
         self._write_index(
@@ -1978,7 +2009,8 @@ class Warehouse:
         n = len(_glob.glob(os.path.join(dest, "*.parquet")))
         if n < self._INDEX_COMPACT_AT:
             return
-        live_df = self.spark.createDataFrame(
+        live_df = local_frame(
+            self.spark,
             [(r,) for r in sorted(live)], "f string"
         )
         kept = (
@@ -2186,7 +2218,7 @@ class Warehouse:
         )
         schema = "f string, c string, register int, rho int"
         markers = [(rel, c, -1, 0) for rel in sorted(new_rel) for c in sketchable]
-        out = self.spark.createDataFrame(markers, schema)
+        out = local_frame(self.spark, markers, schema)
         if rows is not None:
             out = rows.unionByName(out)
         self._write_index(
@@ -2338,7 +2370,7 @@ class Warehouse:
         )
         schema = "f string, c string, tok string"
         markers = [(rel, c, "") for rel in sorted(new_rel) for c in indexable]
-        out = self.spark.createDataFrame(markers, schema)
+        out = local_frame(self.spark, markers, schema)
         if rows is not None:
             out = rows.unionByName(out)
         self._write_index(
@@ -2430,7 +2462,8 @@ class Warehouse:
             .filter((F.col("scanned") == 1) & (F.col("n_hit") < len(terms)))
             .select("f")
         )
-        live_df = self.spark.createDataFrame(
+        live_df = local_frame(
+            self.spark,
             [(r,) for r in sorted(live)], "f string"
         )
         kept_rel = [
@@ -2479,7 +2512,8 @@ class Warehouse:
                 f"HLL sketch for {table} lags the data: {len(live)} "
                 "unindexed file(s); run record_sketch(incremental=True)"
             )
-        live_df = self.spark.createDataFrame(
+        live_df = local_frame(
+            self.spark,
             [(r,) for r in sorted(live)], "f string"
         )
         idx = self.spark.read.parquet(self._sketch_index_dir(table))
@@ -2815,7 +2849,7 @@ class Warehouse:
             markers = (
                 [(rel, -1) for rel in sorted(new_rel)] if indexable else []
             )
-            out = self.spark.createDataFrame(markers, schema)
+            out = local_frame(self.spark, markers, schema)
             if rows is not None:
                 out = rows.unionByName(out)
             self._write_index(
@@ -2843,7 +2877,7 @@ class Warehouse:
                 if cindexable
                 else []
             )
-            cout = self.spark.createDataFrame(cmarkers, cschema)
+            cout = local_frame(self.spark, cmarkers, cschema)
             if crows is not None:
                 cout = crows.unionByName(cout)
             self._write_index(
@@ -3141,7 +3175,8 @@ class Warehouse:
         # -- exact re-rank: ONLY the shortlist ids' raw vectors are
         # read — the In(id) filter pushes to parquet row-group stats
         ids = [int(r["nid"]) for r in short_rows]
-        short_df = self.spark.createDataFrame(
+        short_df = local_frame(
+            self.spark,
             [(int(r["nid"]), int(r["adc_q"])) for r in short_rows],
             "neighbor_id long, adc_q long",
         )
@@ -3201,7 +3236,8 @@ class Warehouse:
         unenc_rel = [r for r in kept_rel if r not in enc]
         parts = []
         if enc_rel:
-            enc_df = self.spark.createDataFrame(
+            enc_df = local_frame(
+                self.spark,
                 [(r,) for r in sorted(enc_rel)], "f string"
             )
             parts.append(
@@ -3602,7 +3638,8 @@ class Warehouse:
             .filter((F.col("scanned") == 1) & (F.col("hit") == 0))
             .select("f")
         )
-        live_df = self.spark.createDataFrame(
+        live_df = local_frame(
+            self.spark,
             [(r,) for r in sorted(live)], "f string"
         )
         kept_rel = [
@@ -4484,7 +4521,7 @@ class Warehouse:
             # plain batch)
             stored = _manifest_schema(meta)
             if stored is not None:
-                empty_dest = self.spark.createDataFrame([], stored)
+                empty_dest = local_frame(self.spark, [], stored)
                 _, batch_t = self._align_for_merge(
                     empty_dest,
                     batch_t,

@@ -169,7 +169,7 @@ class SinkPipeline:
     _persisted: list = dc_field(default_factory=list)
     # A3 batch counters (MergeBatches.java:146-167,305-349): per-batch
     # row/tombstone counts observed on the running plan, no extra pass
-    # (append path); per-phase wall seconds on the upsert path
+    # (append path); per-phase wall seconds on both paths
     last_metrics: dict = dc_field(default_factory=dict)
 
     def __post_init__(self) -> None:
@@ -354,9 +354,17 @@ class SinkPipeline:
     # -- path 1: streaming insert ---------------------------------------
     @_releases_batch_caches
     def write_batch(self, batch: DataFrame, batch_id: int) -> None:
-        """foreachBatch handler for the default append path."""
+        """foreachBatch handler for the default append path.
+
+        ``last_metrics`` then holds ``batch_id``, the observed
+        ``n_records`` and ``n_tombstones``, and the wall seconds of each
+        phase: ``convert_s`` (parse and shape, plus the dead-letter
+        probe and append under ``errors_tolerance`` none/all),
+        ``route_s`` (the per-table split) and ``append_s[<table>]`` —
+        wall clocks only, so reporting adds no Spark job."""
         from pyspark.sql import Observation
 
+        t0 = time.perf_counter()
         obs = Observation(f"kcbq_batch_{batch_id}")
         batch = batch.observe(
             obs,
@@ -364,7 +372,6 @@ class SinkPipeline:
             F.sum(F.col("value").isNull().cast("long")).alias("n_tombstones"),
         )
         df = self.convert(batch)
-        self._obs = obs
         extras = []
         if self.config.kafka_data_field_name:
             extras.append(self.config.kafka_data_field_name)
@@ -386,12 +393,18 @@ class SinkPipeline:
         shaped = to_bq_shape(
             flat, clamp_doubles=self.config.convert_double_special_values
         )
-        for table, sub in split_by_table(shaped).items():
+        metrics: dict = {"batch_id": batch_id, "convert_s": time.perf_counter() - t0}
+        t0 = time.perf_counter()
+        tables = split_by_table(shaped)
+        metrics["route_s"] = time.perf_counter() - t0
+        metrics["append_s"] = {}
+        for table, sub in tables.items():
             # Retry policy = the reference's BigQueryWriter.java:98-149
             # loop with the BigQueryErrorResponses taxonomy re-expressed
             # for Spark failures (errors.py): transient infra/IO retries
             # with jitter, schema violations fail fast. Parquet appends
             # are at-least-once under retry, same as insertAll.
+            t0 = time.perf_counter()
             self._retried(
                 lambda sub=sub, table=table: self.warehouse.append(
                     sub,
@@ -403,10 +416,12 @@ class SinkPipeline:
                     proposed_schema=self._retrieved_schema(table, sub, extras),
                 )
             )
+            metrics["append_s"][table] = time.perf_counter() - t0
         try:
-            self.last_metrics = {"batch_id": batch_id, **self._obs.get}
+            metrics.update(obs.get)
         except Exception:  # pragma: no cover - observation not materialized
             pass
+        self.last_metrics = metrics
 
     # -- path 2: upsert/delete ------------------------------------------
     @_releases_batch_caches

@@ -40,3 +40,18 @@ def test_debugging_cache_reset_without_the_attribute(monkeypatch):
     monkeypatch.delattr(eu, "_enable_debugging_cache")
     assert session._reset_debugging_flag_cache() is False
     assert not hasattr(eu, "_enable_debugging_cache")
+
+
+def test_bench_summary_skips_an_entry_that_overflows_and_keeps_adding():
+    import json
+
+    import bench
+
+    summary = {"metric": "total", "queries": {"q1": 1.0}}
+    base = len(json.dumps(summary, separators=(",", ":")))
+    timings = {"q1": 9.0, "a_very_long_query_name_" + "x" * 40: 2.0, "q2": 3.0}
+    budget = base + len(',"q2":3.0')
+    bench.widen_summary(summary, timings, list(timings), budget)
+    # add-only: q1 keeps its value; the long key is skipped, q2 still fits
+    assert summary["queries"] == {"q1": 1.0, "q2": 3.0}
+    assert len(json.dumps(summary, separators=(",", ":"))) <= budget
