@@ -56,19 +56,6 @@ def flatten_struct(df: DataFrame, col_name: str) -> DataFrame:
     return df.select(*other, F.col(f"{col_name}.*"))
 
 
-def _shape_type(dt: T.DataType, base64_bytes: bool) -> T.DataType | None:
-    """Target Spark type for the BQ projection of ``dt`` (None = unchanged)."""
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType)):
-        return T.LongType()
-    if isinstance(dt, (T.FloatType,)):
-        return T.DoubleType()
-    if isinstance(dt, T.DecimalType):
-        return T.DoubleType()  # lossy, matches KafkaLogicalConverters.java:66-81
-    if isinstance(dt, T.BinaryType) and base64_bytes:
-        return T.StringType()
-    return None
-
-
 def _shape_col(col: Column, dt: T.DataType, *, base64_bytes: bool, clamp: bool) -> Column:
     if isinstance(dt, T.StructType):
         parts = [
@@ -170,17 +157,6 @@ def shape_upsert_rows(
         F.current_timestamp().alias("partitionTime"),
         F.lit(batch_number).cast("long").alias("batchNumber"),
     )
-
-
-def widen_for_bq(df: DataFrame) -> DataFrame:
-    """Just the numeric widening part of the projection (ints -> INT64,
-    floats/decimals -> FLOAT64), reference :65-84."""
-    out = df
-    for f in df.schema.fields:
-        tgt = _shape_type(f.dataType, base64_bytes=False)
-        if tgt is not None:
-            out = out.withColumn(f.name, F.col(f.name).cast(tgt))
-    return out
 
 
 if sys.version_info < (3, 9):  # pragma: no cover

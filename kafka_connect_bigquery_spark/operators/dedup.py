@@ -151,20 +151,6 @@ def passage_boilerplate(
     )
 
 
-def char_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct character n-grams of the canonical text, as an array.
-
-    Declarative: sequence + transform + array_distinct (codegen'd,
-    no UDF)."""
-    c = canonical_text(col)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(c) - (n - 1), F.lit(1))),
-            lambda i: c.substr(i, F.lit(n)),
-        )
-    )
-
-
 def _shingle_postings(
     df: DataFrame,
     id_col: str,

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -43,14 +43,6 @@ def dedup_latest_per_key(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def _null_safe_key_cond(dest: DataFrame, src: DataFrame, key_cols: Sequence[str]) -> Column:
-    cond = None
-    for k in key_cols:
-        c = dest[k].eqNullSafe(src[k])
-        cond = c if cond is None else (cond & c)
-    return cond
 
 
 def merge_upsert(

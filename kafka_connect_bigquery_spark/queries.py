@@ -52,13 +52,6 @@ def _ts_us(col: str = "ts") -> str:
 _TS_US = _ts_us()
 
 
-def _dec(col, prec: int = 18, scale: int = 4):
-    """Cast to decimal so SUM is exact and order-independent (hash-stable
-    across Spark partial aggregation and DuckDB)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast(f"decimal({prec},{scale})")
-
-
 # Fixed-point quantization for money-style aggregates.
 #
 # Summing doubles is partial-aggregation-order dependent, and a straight

@@ -74,10 +74,6 @@ def lookup(name: str) -> LogicalConverter | None:
     return _REGISTRY.get(name)
 
 
-def registered_names() -> list[str]:
-    return sorted(_REGISTRY)
-
-
 # --- Kafka built-in logical types (KafkaLogicalConverters.java) -----------
 
 register(

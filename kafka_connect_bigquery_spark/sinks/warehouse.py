@@ -41,6 +41,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Literal
@@ -161,6 +162,33 @@ class TableSpec:
     @property
     def partition_col(self) -> str | None:
         return _GRAIN_COL.get(self.partition_grain)
+
+
+@dataclass(frozen=True)
+class _IndexTable:
+    """One parquet table of a per-file index kind, stored at
+    ``<table>/<kind subdir>/<name>/`` with rows of ``ddl``. ``build``
+    names the Warehouse method ``(table, meta, files) -> (rows,
+    indexed_cols)`` — looked up on the instance, so it can be
+    overridden — whose rows carry the absolute ``input_file_name()`` in
+    ``f``; ``marker(f, c)`` is the row written per scanned (file,
+    indexed column); ``when(meta)`` says whether a recording carries
+    this table at all."""
+
+    name: str
+    ddl: str
+    marker: Callable[[str, str], tuple]
+    build: str
+    when: Callable[[dict], bool] = lambda meta: True
+
+
+@dataclass(frozen=True)
+class _IndexKind:
+    """A per-file index kind: ``<table>/<subdir>/`` holds its
+    ``meta.json`` and its index tables."""
+
+    subdir: str
+    tables: tuple[_IndexTable, ...]
 
 
 class Warehouse:
@@ -1671,38 +1699,62 @@ class Warehouse:
             json.dump(zm, f)
         os.replace(tmp, self._zonemap_path(table))
 
-    # -- bloom filters (file skipping on point-lookup columns) ------------
+    # -- per-file skipping indexes: one lifecycle for every kind ----------
     #
-    # Zone maps prune RANGE predicates on clustered columns; they are
-    # useless for equality probes on a column the layout was not sorted
-    # by (every file's [min,max] spans the domain). A per-file Bloom
-    # filter answers "can this file contain v?" for exactly that case —
-    # the high-cardinality point-lookup (user_id, order id, join key)
-    # a 100 TB table serves without re-clustering. False positives only
-    # cost an extra file read; false negatives are impossible.
+    # Zone maps prune RANGE predicates on clustered columns. Four more
+    # per-file indexes answer what zone maps cannot: Bloom (equality on
+    # columns the layout was not sorted by), HLL sketch (distinct
+    # counts), text postings (CONTAINS) and IVF ANN lists (nearest
+    # vectors). Each kind is a row of ``_INDEX_KINDS`` — a subdir, its
+    # parquet index table(s), a marker row and a build — and
+    # ``_record_file_index`` runs the one lifecycle they share; see its
+    # docstring for the storage and concurrency contract.
 
-    BLOOM_M_BITS = 8192  # 1 KiB bitmap per column per file
-    BLOOM_K_HASHES = 4
+    _INDEX_KINDS = {
+        "bloom": _IndexKind("_bloom", (
+            _IndexTable(
+                "index", "f string, c string, w int, bits long",
+                lambda f, c: (f, c, -1, 0), "_bloom_build",
+            ),
+        )),
+        "sketch": _IndexKind("_sketch", (
+            _IndexTable(
+                "index", "f string, c string, register int, rho int",
+                lambda f, c: (f, c, -1, 0), "_sketch_build",
+            ),
+        )),
+        # the canonical tokenizer never emits "", so the marker cannot
+        # collide with a posting
+        "text": _IndexKind("_text", (
+            _IndexTable(
+                "index", "f string, c string, tok string",
+                lambda f, c: (f, c, ""), "_text_build",
+            ),
+        )),
+        # one vector column: one marker per scanned file in each table
+        "ann": _IndexKind("_ann", (
+            _IndexTable(
+                "index", "f string, list_id int",
+                lambda f, c: (f, -1), "_ann_build",
+            ),
+            _IndexTable(
+                "codes", "f string, list_id int, nid long, codes array<int>",
+                lambda f, c: (f, -1, None, None), "_ann_codes_build",
+                when=lambda meta: meta.get("pq_m") is not None,
+            ),
+        )),
+    }
 
-    _BLOOMABLE = (T.StringType, T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-
-    def _bloom_dir(self, table: str) -> str:
-        return os.path.join(self.path(table), "_bloom")
-
-    def _bloom_meta_path(self, table: str) -> str:
-        return os.path.join(self._bloom_dir(table), "meta.json")
-
-    def _bloom_index_dir(self, table: str) -> str:
-        return os.path.join(self._bloom_dir(table), "index")
-
-    # parquet-backed METADATA subtrees under a table dir (file-skipping
-    # and distinct-count indexes) — never table data. An explicit
+    # parquet-backed METADATA subtrees under a table dir (the index
+    # kinds and the retained layers) — never table data. An explicit
     # denylist, NOT an underscore pattern: `_buckets/` is underscore-
     # prefixed on purpose (hidden from plain Spark reads during the
     # bucketed migration) yet IS data — a startswith('_') rule emptied
     # every bucketed listing (regression-probed: describe_detail
     # num_files=0, compact no-op).
-    _META_DIRS = frozenset({"_bloom", "_sketch", "_text", "_ann", "_retained"})
+    _META_DIRS = frozenset(
+        {kind.subdir for kind in _INDEX_KINDS.values()} | {"_retained"}
+    )
 
     @classmethod
     def _data_files(cls, tdir: str) -> list[str]:
@@ -1736,224 +1788,187 @@ class Warehouse:
                 out[os.path.relpath(p, tdir)] = p
         return out
 
-    def bloom_meta(self, table: str) -> dict | None:
-        """The recorded bloom parameters ({m, k, cols}) or None."""
+    def _index_path(self, table: str, kind: str, *parts: str) -> str:
+        """``<table>/<kind subdir>/<parts>``: the kind's dir, its
+        ``meta.json``, or one of its index tables."""
+        return os.path.join(
+            self.path(table), self._INDEX_KINDS[kind].subdir, *parts
+        )
+
+    def _index_meta(self, table: str, kind: str) -> dict | None:
         import json
 
-        p = self._bloom_meta_path(table)
+        p = self._index_path(table, kind, "meta.json")
         if not os.path.exists(p):
             return None
         with open(p) as f:
             return json.load(f)
 
-    def _write_bloom_meta(self, table: str, meta: dict) -> None:
+    def _write_index_meta(self, table: str, kind: str, meta: dict) -> None:
         import json
 
-        os.makedirs(self._bloom_dir(table), exist_ok=True)
-        dst = self._bloom_meta_path(table)
+        os.makedirs(self._index_path(table, kind), exist_ok=True)
+        dst = self._index_path(table, kind, "meta.json")
         tmp = dst + f".tmp.{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as f:
             json.dump(meta, f)
         os.replace(tmp, dst)
 
-    def bloom_indexed_files(self, table: str) -> set[str]:
-        """Relative paths of data files the bloom index covers. Reads
-        ONLY the ``f`` column of the index table (column pruning), one
-        batch at a time — file names, never bitmaps, reach the driver."""
-        d = self._bloom_index_dir(table)
-        if not os.path.isdir(d):
+    @staticmethod
+    def _indexed_files(dest: str) -> set[str]:
+        """Relative paths of the data files an index table covers. Reads
+        ONLY the ``f`` column (column pruning), one batch at a time —
+        file names, never index payloads, reach the driver."""
+        if not os.path.isdir(dest):
             return set()
         import pyarrow.compute as pc
         import pyarrow.dataset as pads
 
         names: set[str] = set()
-        for batch in pads.dataset(d, format="parquet").to_batches(columns=["f"]):
+        for batch in pads.dataset(dest, format="parquet").to_batches(columns=["f"]):
             names.update(pc.unique(batch.column("f")).to_pylist())
         return names
 
-    @staticmethod
-    def _bloom_probe_positions(value, m: int, k: int) -> list[int]:
-        """Kirsch-Mitzenmacher double hashing from one md5: position_i =
-        (h1 + i*h2) mod m. MUST mirror the Spark-side build expression
-        (md5 of CAST(value AS STRING), first/second 8 hex digits)."""
-        import hashlib
-
-        h = hashlib.md5(str(value).encode("utf-8")).hexdigest()
-        h1, h2 = int(h[:8], 16), int(h[8:16], 16)
-        return [(h1 + i * h2) % m for i in range(k)]
-
-    def _bloom_build(
-        self, table: str, cols: list[str], m: int, k: int, files: list[str] | None
-    ) -> tuple[DataFrame | None, list[str]]:
-        """Distributed bitmap build: ONE Spark pass for all columns —
-        md5 + double hashing as JVM expressions, then the set-bit
-        positions are packed into 64-bit words ON THE EXECUTORS
-        (``bit_or`` over ``1 << (pos % 64)`` grouped by (file, column,
-        pos div 64)). Returns ``(rows, bloomable)`` where ``rows`` is a
-        DataFrame of ``(f: rel path, c: column, w: word index, bits:
-        packed 64-bit word)`` ready to land in the parquet index table —
-        NO bitmap ever reaches the driver; the build is a pure
-        executor-side write however many files the table has.
-        ``files=None`` scans the whole table; a file list (the append
-        path) scans only those files. ``bloomable`` is which of ``cols``
-        were present with an int/string type in the scanned schema.
-
-        Unlike the HLL sketch build, reading through read() (pending
-        deferred deletes applied) is fine here IN EITHER DIRECTION:
-        bits missing for deleted rows prune files whose matching rows
-        the read-side filter would drop anyway, and stale extra bits
-        only cost an extra file open — skipping is an optimization,
-        never a correctness dependency."""
-        tdir = self.path(table)
-        if files is None and self.layout_meta(table).get("generations") is None:
-            src = self.read(table)
-        else:
-            # explicit file list (the incremental path) or a bucketed
-            # table (live files resolve through the generation
-            # manifest; generation paths reject a shared basePath)
-            src = self._index_scan(table, files)
-            if src is None:
-                return None, []
-        fields = {f.name: f.dataType for f in src.schema.fields}
-        bloomable = [
-            c
-            for c in cols
-            if c in fields and isinstance(fields[c], self._BLOOMABLE)
-        ]
-        if not bloomable:
-            return None, bloomable
-        # one job for ALL columns: each row contributes one (column,
-        # stringified value) entry per bloomable column via an exploded
-        # struct array, so the data files are scanned once however many
-        # columns are bloomed (a per-column loop re-reads the table
-        # N times). The md5-of-CAST(value AS STRING) expression must
-        # mirror _bloom_probe_positions exactly.
-        entries = F.array(
-            *[
-                F.struct(
-                    F.lit(c).alias("c"), F.col(c).cast("string").alias("s")
-                )
-                for c in bloomable
-            ]
-        )
-        posdf = (
-            src.select(F.input_file_name().alias("f"), F.explode(entries).alias("e"))
-            .filter(F.col("e.s").isNotNull())
-            .select("f", F.col("e.c").alias("c"), F.md5(F.col("e.s")).alias("h"))
-            .select(
-                "f",
-                "c",
-                F.conv(F.substring("h", 1, 8), 16, 10).cast("long").alias("h1"),
-                F.conv(F.substring("h", 9, 8), 16, 10).cast("long").alias("h2"),
-            )
-            .select(
-                "f",
-                "c",
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(0), F.lit(k - 1)),
-                        lambda i: (F.col("h1") + i * F.col("h2")) % m,
-                    )
-                ).alias("pos"),
-            )
-            # executor-side packing: partial bit_or runs map-side, so
-            # the shuffle carries one word per (file, column,
-            # word-index) per map task; zero-words are simply absent
-            # (the probe treats a missing word as all-zero)
-            .groupBy("f", "c", F.expr("CAST(pos DIV 64 AS INT)").alias("w"))
-            .agg(
-                F.bit_or(
-                    F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))")
-                ).alias("bits")
-            )
-            # absolute file URI -> path relative to the table dir, on
-            # the executors (mirrors os.path.relpath on the probe side)
-            .withColumn(
-                "f",
-                F.expr(
-                    "substring(regexp_replace(f, '^file:(//)?', ''), "
-                    f"{len(tdir) + 2})"
-                ),
-            )
-        )
-        return posdf, bloomable
-
-    def record_bloom(
-        self,
-        table: str,
-        cols: list[str],
-        *,
-        m_bits: int = BLOOM_M_BITS,
-        k_hashes: int = BLOOM_K_HASHES,
-        incremental: bool = False,
+    def _record_file_index(
+        self, table: str, kind: str, meta: dict, incremental: bool
     ) -> None:
-        """Record per-file Bloom filters for ``cols`` (int/string columns
-        only — float equality probes are a bug, not a query). The index
-        is a PARQUET TABLE at ``<table>/_bloom/index/`` — one row per
-        (file, column, 64-bit word): ``(f, c, w, bits)``, plus a
-        ``w = -1`` marker row per scanned (file, column) so the probe
-        can tell "scanned, value provably absent" (prunable) from
-        "never indexed" (conservatively kept). Zero words are simply
-        absent. The build writes executor-side — no bitmap, at any file
-        count, is ever materialized on the driver, and the probe reads
-        only the <= k words each lookup needs via parquet predicate
-        pushdown. Consulted by ``read_pruned_where`` for equality
-        predicates. Once recorded, ``append`` keeps it fresh
-        incrementally (new files only, appended to the index table) and
-        ``overwrite``/``compact`` rebuild it (dropping rows for dead
-        files).
+        """Bring every index table of ``kind`` up to date with the live
+        file set and record ``meta`` — the one lifecycle all kinds share.
 
-        Bucketed MERGE tables (r08, completing the per-generation index
-        family): bucket routing already prunes by the KEY columns, so
-        bloom's value there is NON-key equality ("find this request id
-        in the upsert table") — the live set resolves through the
-        generation manifest, merge commits index new generations
-        incrementally, dead generations' rows are ignored by the probe
-        (it iterates live files only), full rebuilds drop them.
+        A full build (``incremental=False``, or ``meta`` differs from
+        the recorded one) scans the whole live set and overwrites each
+        table; a table the new ``meta`` no longer carries is removed, so
+        stale rows never survive under fresh meta. An incremental build
+        scans only live-minus-indexed files, per table — a table torn
+        behind its siblings (ANN codes whose write died after the
+        membership rows landed) backfills on the next refresh — appends
+        ONE file to each table and self-compacts it
+        (``_maybe_compact_index``). Each table gets a marker row per
+        scanned (file, indexed column), so a probe tells "scanned,
+        provably absent" (prunable) from "never indexed" (kept, or
+        loudly refused by ``approx_distinct``). Bucketed MERGE tables
+        follow the per-GENERATION file lifecycle: the live set resolves
+        through the generation manifest, superseded generations' rows go
+        dead in place (every probe joins against the live set) and a
+        full build drops them.
 
         Concurrency contract (no lock held across the Spark build —
         holding the commit lock through a long job would trip the
         stale-lock sweep): safe WITHOUT serialization because (a) index
-        rows are idempotent — duplicate (f, c, w) rows from racing
-        recorders carry identical bits; (b) every (f, c) group — marker
-        and word rows — lands WHOLE inside one output file
-        (``_write_index``: incremental builds coalesce to one file,
-        full rebuilds repartition BY ``f``), so a marker without its
-        words, which would prune wrongly, cannot exist; (c) a build
-        torn away entirely by a racing full rebuild just leaves files
-        unindexed, and the probe treats unindexed as
-        conservatively-kept. Worst case is fewer prunes, never wrong
-        rows: skipping is an optimization, not a correctness
+        rows are idempotent — duplicate rows from racing recorders carry
+        identical values; (b) every (f, c) group — marker and rows —
+        lands WHOLE inside one output file (``_write_index``), so a
+        marker without its rows, which would prune wrongly, cannot
+        exist; (c) a build torn away entirely by a racing full rebuild
+        just leaves files unindexed. Worst case is fewer prunes, never
+        wrong rows: skipping is an optimization, not a correctness
         dependency."""
-        meta = {"m": m_bits, "k": k_hashes, "cols": sorted(cols)}
+        incremental = incremental and self._index_meta(table, kind) == meta
         live = self._live_data_files(table)
-        mode = "overwrite"
-        scan: list[str] | None = None  # None = whole-table scan
-        new_rel = set(live)
-        if incremental and self.bloom_meta(table) == meta:
-            indexed = self.bloom_indexed_files(table)
-            new_rel = {rel for rel in live if rel not in indexed}
-            if not new_rel:
-                return
-            scan = [live[r] for r in sorted(new_rel)]
-            mode = "append"
-        rows, bloomable = (
-            self._bloom_build(table, meta["cols"], m_bits, k_hashes, scan)
-            if new_rel
-            else (None, [])
+        wrote = not incremental
+        for spec in self._INDEX_KINDS[kind].tables:
+            dest = self._index_path(table, kind, spec.name)
+            if not spec.when(meta):
+                if not incremental:
+                    shutil.rmtree(dest, ignore_errors=True)
+                continue
+            new_rel = sorted(live)
+            if incremental:
+                indexed = self._indexed_files(dest)
+                new_rel = [r for r in new_rel if r not in indexed]
+                if not new_rel:
+                    continue
+            scan = [live[r] for r in new_rel] if incremental else None
+            rows, cols = (
+                getattr(self, spec.build)(table, meta, scan)
+                if new_rel
+                else (None, [])
+            )
+            markers = [spec.marker(rel, c) for rel in new_rel for c in cols or ()]
+            out = local_frame(self.spark, markers, spec.ddl)
+            if rows is not None:
+                # absolute file URI -> path relative to the table dir, on
+                # the executors (mirrors os.path.relpath on the probe side)
+                rows = rows.withColumn(
+                    "f",
+                    F.expr(
+                        "substring(regexp_replace(f, '^file:(//)?', ''), "
+                        f"{len(self.path(table)) + 2})"
+                    ),
+                )
+                out = rows.unionByName(out)
+            self._write_index(
+                out, mode="append" if incremental else "overwrite",
+                n_files=len(new_rel), dest=dest,
+            )
+            if incremental:
+                self._maybe_compact_index(dest, live)
+            wrote = True
+        if wrote:
+            self._write_index_meta(table, kind, meta)
+
+    def _recorded_indexes(self, table: str) -> dict[str, dict]:
+        """``{kind: meta}`` for every index recorded on ``table``."""
+        metas = {kind: self._index_meta(table, kind) for kind in self._INDEX_KINDS}
+        return {kind: meta for kind, meta in metas.items() if meta}
+
+    def _refresh_indexes(
+        self, table: str, *, incremental: bool, recorded: dict | None = None
+    ) -> None:
+        """Index upkeep after a commit: every recorded kind (or those in
+        ``recorded``, captured before an ``overwrite``/``compact`` swapped
+        the recordings away) re-runs ``_record_file_index`` with its
+        recorded meta — incrementally after append/merge/
+        compact_partition, as a full rebuild after a rewrite."""
+        if recorded is None:
+            recorded = self._recorded_indexes(table)
+        for kind, meta in recorded.items():
+            self._record_file_index(table, kind, meta, incremental)
+
+    def _index_scan(self, table: str, files: list[str] | None) -> DataFrame | None:
+        """Raw-file scan feeding an index build. ``files=None`` scans the
+        whole live set. Flat tables read with ``basePath`` so
+        Hive-partition columns stay indexable; bucketed generation paths
+        (``_buckets/<b>/gen=<g>/``) trip Spark's partition-discovery
+        conflict check under a shared basePath (probed), and carry no
+        Hive columns anyway — each file reads against its own parent."""
+        meta = self.layout_meta(table)
+        bucketed = meta.get("generations") is not None
+        if files is None:
+            files = (
+                sorted(self._live_data_files(table, meta).values())
+                if bucketed
+                else self._data_files(self.path(table))
+            )
+        if not files:
+            return None
+        return self._read_stored(
+            files, meta, base_path=None if bucketed else self.path(table)
         )
-        schema = "f string, c string, w int, bits long"
-        markers = [(rel, c, -1, 0) for rel in sorted(new_rel) for c in bloomable]
-        out = local_frame(self.spark, markers, schema)
-        if rows is not None:
-            out = rows.unionByName(out)
-        self._write_index(
-            out, mode=mode, n_files=len(new_rel),
-            dest=self._bloom_index_dir(table),
+
+    @staticmethod
+    def _typed_cols(src: DataFrame, cols: list[str], types: tuple) -> list[str]:
+        """Which of ``cols`` the scanned schema has with one of ``types``."""
+        fields = {f.name: f.dataType for f in src.schema.fields}
+        return [c for c in cols if isinstance(fields.get(c), types)]
+
+    @staticmethod
+    def _file_values(src: DataFrame, cols: list[str]) -> DataFrame:
+        """``(f, c, s)``: every non-NULL value of ``cols`` as a string,
+        tagged with its file and column. One scan for ALL columns via an
+        exploded struct array — a per-column loop re-reads the table N
+        times."""
+        entries = F.array(
+            *[
+                F.struct(F.lit(c).alias("c"), F.col(c).cast("string").alias("s"))
+                for c in cols
+            ]
         )
-        if mode == "append":
-            self._maybe_compact_index(self._bloom_index_dir(table), live)
-        self._write_bloom_meta(table, meta)
+        return (
+            src.select(F.input_file_name().alias("f"), F.explode(entries).alias("e"))
+            .filter(F.col("e.s").isNotNull())
+            .select("f", F.col("e.c").alias("c"), F.col("e.s").alias("s"))
+        )
 
     # indexed table files per index output file on a full rebuild —
     # sized so a rebuild at millions of files fans out across the
@@ -1963,7 +1978,7 @@ class Warehouse:
     def _write_index(
         self, out: DataFrame, *, mode: str, n_files: int, dest: str
     ) -> None:
-        """Commit an index build (Bloom words / HLL registers).
+        """Commit an index build.
 
         Incremental appends stay ONE parquet file: the batch is tiny
         (just-written table files) and a single file bounds listing
@@ -1992,18 +2007,17 @@ class Warehouse:
     _INDEX_COMPACT_AT = 64
 
     def _maybe_compact_index(self, dest: str, live: dict[str, str]) -> None:
-        """Self-compaction of a parquet index table (bloom words / HLL
-        registers / text postings): triggered by accumulated
-        incremental-append files, rewrites the index FROM ITSELF —
-        rows for dead files dropped, (f, c) groups kept whole per
-        output file (the torn-read atomicity contract), output count
+        """Self-compaction of a parquet index table: triggered by
+        accumulated incremental-append files, rewrites the index FROM
+        ITSELF — rows for dead files dropped, (f, c) groups kept whole
+        per output file (the torn-read atomicity contract), output count
         scaling with the indexed file count. Cost is O(index), amortized
         O(index/_INDEX_COMPACT_AT) per refresh; the data files are
         never rescanned. Concurrency: same contract as a full rebuild —
         Spark's job commit publishes all output files or none, and a
         reader racing the overwrite window sees fewer indexed files,
-        which every probe treats conservatively (bloom/text) or loudly
-        (sketch staleness check), never wrongly."""
+        which every probe treats conservatively (bloom/text/ann) or
+        loudly (sketch staleness check), never wrongly."""
         import glob as _glob
 
         n = len(_glob.glob(os.path.join(dest, "*.parquet")))
@@ -2023,92 +2037,157 @@ class Warehouse:
         nparts = max(1, -(-len(live) // self._INDEX_FILES_PER_OUTPUT))
         kept.repartition(nparts, "f").write.mode("overwrite").parquet(dest)
 
-    def _refresh_bloom_if_recorded(self, table: str, *, incremental: bool) -> None:
-        meta = self.bloom_meta(table)
-        if not meta:
-            return
-        self.record_bloom(
-            table,
-            meta["cols"],
-            m_bits=meta["m"],
-            k_hashes=meta["k"],
-            incremental=incremental,
+    # -- bloom filters (file skipping on point-lookup columns) ------------
+    #
+    # Zone maps are useless for equality probes on a column the layout
+    # was not sorted by (every file's [min,max] spans the domain). A
+    # per-file Bloom filter answers "can this file contain v?" for
+    # exactly that case — the high-cardinality point-lookup (user_id,
+    # order id, join key) a 100 TB table serves without re-clustering.
+    # False positives only cost an extra file read; false negatives are
+    # impossible.
+
+    BLOOM_M_BITS = 8192  # 1 KiB bitmap per column per file
+    BLOOM_K_HASHES = 4
+
+    _BLOOMABLE = (T.StringType, T.LongType, T.IntegerType, T.ShortType, T.ByteType)
+
+    def bloom_meta(self, table: str) -> dict | None:
+        """The recorded bloom parameters ({m, k, cols}) or None."""
+        return self._index_meta(table, "bloom")
+
+    def bloom_indexed_files(self, table: str) -> set[str]:
+        """Relative paths of data files the bloom index covers."""
+        return self._indexed_files(self._index_path(table, "bloom", "index"))
+
+    @staticmethod
+    def _bloom_probe_positions(value, m: int, k: int) -> list[int]:
+        """Kirsch-Mitzenmacher double hashing from one md5: position_i =
+        (h1 + i*h2) mod m. MUST mirror the Spark-side build expression
+        (md5 of CAST(value AS STRING), first/second 8 hex digits)."""
+        import hashlib
+
+        h = hashlib.md5(str(value).encode("utf-8")).hexdigest()
+        h1, h2 = int(h[:8], 16), int(h[8:16], 16)
+        return [(h1 + i * h2) % m for i in range(k)]
+
+    def _bloom_build(
+        self, table: str, meta: dict, files: list[str] | None
+    ) -> tuple[DataFrame | None, list[str]]:
+        """Distributed bitmap build: ONE Spark pass for all columns —
+        md5 + double hashing as JVM expressions, then the set-bit
+        positions are packed into 64-bit words ON THE EXECUTORS
+        (``bit_or`` over ``1 << (pos % 64)`` grouped by (file, column,
+        pos div 64)). Returns ``(rows, bloomable)`` where ``rows`` is a
+        DataFrame of ``(f, c: column, w: word index, bits: packed 64-bit
+        word)`` — NO bitmap ever reaches the driver; the build is a pure
+        executor-side write however many files the table has.
+        ``files=None`` scans the whole table; a file list (the append
+        path) scans only those files. ``bloomable`` is which of the
+        meta's columns were present with an int/string type in the
+        scanned schema.
+
+        Unlike the HLL sketch build, reading through read() (pending
+        deferred deletes applied) is fine here IN EITHER DIRECTION:
+        bits missing for deleted rows prune files whose matching rows
+        the read-side filter would drop anyway, and stale extra bits
+        only cost an extra file open — skipping is an optimization,
+        never a correctness dependency."""
+        if files is None and self.layout_meta(table).get("generations") is None:
+            src = self.read(table)
+        else:
+            # explicit file list (the incremental path) or a bucketed
+            # table (live files resolve through the generation
+            # manifest; generation paths reject a shared basePath)
+            src = self._index_scan(table, files)
+            if src is None:
+                return None, []
+        bloomable = self._typed_cols(src, meta["cols"], self._BLOOMABLE)
+        if not bloomable:
+            return None, bloomable
+        m, k = meta["m"], meta["k"]
+        # the md5-of-CAST(value AS STRING) expression must mirror
+        # _bloom_probe_positions exactly
+        posdf = (
+            self._file_values(src, bloomable)
+            .select("f", "c", F.md5(F.col("s")).alias("h"))
+            .select(
+                "f",
+                "c",
+                F.conv(F.substring("h", 1, 8), 16, 10).cast("long").alias("h1"),
+                F.conv(F.substring("h", 9, 8), 16, 10).cast("long").alias("h2"),
+            )
+            .select(
+                "f",
+                "c",
+                F.explode(
+                    F.transform(
+                        F.sequence(F.lit(0), F.lit(k - 1)),
+                        lambda i: (F.col("h1") + i * F.col("h2")) % m,
+                    )
+                ).alias("pos"),
+            )
+            # executor-side packing: partial bit_or runs map-side, so
+            # the shuffle carries one word per (file, column,
+            # word-index) per map task; zero-words are simply absent
+            # (the probe treats a missing word as all-zero)
+            .groupBy("f", "c", F.expr("CAST(pos DIV 64 AS INT)").alias("w"))
+            .agg(
+                F.bit_or(
+                    F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))")
+                ).alias("bits")
+            )
         )
+        return posdf, bloomable
+
+    def record_bloom(
+        self,
+        table: str,
+        cols: list[str],
+        *,
+        m_bits: int = BLOOM_M_BITS,
+        k_hashes: int = BLOOM_K_HASHES,
+        incremental: bool = False,
+    ) -> None:
+        """Record per-file Bloom filters for ``cols`` (int/string columns
+        only — float equality probes are a bug, not a query). The index
+        table ``<table>/_bloom/index/`` holds one row per (file, column,
+        64-bit word): ``(f, c, w, bits)``, zero words absent, plus a
+        ``w = -1`` marker per scanned (file, column). The probe
+        (``read_pruned_where``, equality predicates) reads only the
+        <= k words each lookup needs via parquet predicate pushdown.
+        On bucketed MERGE tables bucket routing already prunes by the
+        KEY columns, so bloom's value there is NON-key equality ("find
+        this request id in the upsert table"). Lifecycle and
+        concurrency contract: ``_record_file_index``."""
+        meta = {"m": m_bits, "k": k_hashes, "cols": sorted(cols)}
+        self._record_file_index(table, "bloom", meta, incremental)
 
     # -- HLL distinct-count index (metadata-only COUNT DISTINCT) ----------
     #
-    # Per-file HyperLogLog registers as a parquet index table, same
-    # storage discipline as the Bloom index: built executor-side in one
-    # scan, kept fresh incrementally on append (new files only), rebuilt
-    # on overwrite/compact. Registers merge by per-register max, so the
-    # table-level (or any file-subset) distinct estimate is answered
-    # from the index alone — at 100 TB, a COUNT(DISTINCT user_id) class
-    # dashboard query costs one read of <= files x 2^p tiny rows instead
-    # of a full-table shuffle. Same register arithmetic as
-    # operators/sketch.py (md5 32-bit prefix, 'hll:' salt), so an
-    # external engine reproduces the registers bit-for-bit.
+    # Per-file HyperLogLog registers. Registers merge by per-register
+    # max, so the table-level (or any file-subset) distinct estimate is
+    # answered from the index alone — at 100 TB, a COUNT(DISTINCT
+    # user_id) class dashboard query costs one read of <= files x 2^p
+    # tiny rows instead of a full-table shuffle. Same register
+    # arithmetic as operators/sketch.py (md5 32-bit prefix, 'hll:'
+    # salt), so an external engine reproduces the registers
+    # bit-for-bit.
 
     SKETCH_P = 8  # 256 registers per file per column
 
     _SKETCHABLE = (T.StringType, T.LongType, T.IntegerType, T.ShortType, T.ByteType)
 
-    def _sketch_dir(self, table: str) -> str:
-        return os.path.join(self.path(table), "_sketch")
-
-    def _sketch_meta_path(self, table: str) -> str:
-        return os.path.join(self._sketch_dir(table), "meta.json")
-
-    def _sketch_index_dir(self, table: str) -> str:
-        return os.path.join(self._sketch_dir(table), "index")
-
     def sketch_meta(self, table: str) -> dict | None:
         """The recorded sketch parameters ({p, cols}) or None."""
-        import json
-
-        p = self._sketch_meta_path(table)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
+        return self._index_meta(table, "sketch")
 
     def sketch_indexed_files(self, table: str) -> set[str]:
-        """Relative paths the HLL index covers (reads only the ``f``
-        column — names, never registers, reach the driver in bulk)."""
-        d = self._sketch_index_dir(table)
-        if not os.path.isdir(d):
-            return set()
-        import pyarrow.compute as pc
-        import pyarrow.dataset as pads
-
-        names: set[str] = set()
-        for batch in pads.dataset(d, format="parquet").to_batches(columns=["f"]):
-            names.update(pc.unique(batch.column("f")).to_pylist())
-        return names
-
-    def _index_scan(self, table: str, files: list[str] | None) -> DataFrame | None:
-        """Raw-file scan feeding an index build (Bloom words / HLL
-        registers / text postings). ``files=None`` scans the whole live
-        set. Flat tables read with ``basePath`` so Hive-partition
-        columns stay indexable; bucketed generation paths
-        (``_buckets/<b>/gen=<g>/``) trip Spark's partition-discovery
-        conflict check under a shared basePath (probed), and carry no
-        Hive columns anyway — each file reads against its own parent."""
-        meta = self.layout_meta(table)
-        bucketed = meta.get("generations") is not None
-        if files is None:
-            files = (
-                sorted(self._live_data_files(table, meta).values())
-                if bucketed
-                else self._data_files(self.path(table))
-            )
-        if not files:
-            return None
-        return self._read_stored(
-            files, meta, base_path=None if bucketed else self.path(table)
-        )
+        """Relative paths the HLL index covers."""
+        return self._indexed_files(self._index_path(table, "sketch", "index"))
 
     def _sketch_build(
-        self, table: str, cols: list[str], p: int, files: list[str] | None
+        self, table: str, meta: dict, files: list[str] | None
     ) -> tuple[DataFrame | None, list[str]]:
         """One scan for all columns: (f, c, register, rho) rows with
         per-(file, column, register) max rho aggregated map-side. The
@@ -2121,34 +2200,23 @@ class Warehouse:
         view while the incremental path scans raw new files would mix
         two semantics (fuzz-found: delete_where then record_sketch
         under-counted). The index is file-physical by contract."""
-        tdir = self.path(table)
         src = self._index_scan(table, files)
         if src is None:
             return None, []
-        fields = {f.name: f.dataType for f in src.schema.fields}
-        sketchable = [
-            c for c in cols if c in fields and isinstance(fields[c], self._SKETCHABLE)
-        ]
+        sketchable = self._typed_cols(src, meta["cols"], self._SKETCHABLE)
         if not sketchable:
             return None, sketchable
-        wbits = 32 - p
-        entries = F.array(
-            *[
-                F.struct(F.lit(c).alias("c"), F.col(c).cast("string").alias("s"))
-                for c in sketchable
-            ]
-        )
+        wbits = 32 - meta["p"]
         hv = F.conv(
-            F.substring(F.md5(F.concat(F.lit("hll:"), F.col("e.s"))), 1, 8), 16, 10
+            F.substring(F.md5(F.concat(F.lit("hll:"), F.col("s"))), 1, 8), 16, 10
         ).cast("long")
         w = F.col("hv") % (1 << wbits)
         rho = F.when(w == 0, F.lit(wbits + 1)).otherwise(
             F.lit(wbits + 1) - F.length(F.bin(w))
         )
         rows = (
-            src.select(F.input_file_name().alias("f"), F.explode(entries).alias("e"))
-            .filter(F.col("e.s").isNotNull())
-            .select("f", F.col("e.c").alias("c"), hv.alias("hv"))
+            self._file_values(src, sketchable)
+            .select("f", "c", hv.alias("hv"))
             .select(
                 "f",
                 "c",
@@ -2157,13 +2225,6 @@ class Warehouse:
             )
             .groupBy("f", "c", "register")
             .agg(F.max("rho").alias("rho"))
-            .withColumn(
-                "f",
-                F.expr(
-                    "substring(regexp_replace(f, '^file:(//)?', ''), "
-                    f"{len(tdir) + 2})"
-                ),
-            )
         )
         return rows, sketchable
 
@@ -2180,133 +2241,49 @@ class Warehouse:
         rows are ``(f, c, register, rho)`` plus a ``register = -1``
         marker per scanned (file, column), so coverage ("file scanned,
         column all-NULL there") is distinguishable from "never indexed".
-        Same single-file-per-build commit + idempotent-rows concurrency
-        contract as the Bloom index (identical registers from racing
-        recorders, a marker never lands without its rows). Once
-        recorded, ``append`` refreshes it incrementally and
-        ``overwrite``/``compact`` rebuild it.
-
-        Bucketed MERGE tables (r07 verdict ask 3) follow the
-        per-GENERATION file lifecycle: the live set resolves through the
-        generation manifest (``_live_data_files``), every merge commit
-        incrementally indexes the new generations' files, and rows for
-        superseded generations simply go dead in place — ``approx_
-        distinct`` joins registers to the live manifest so dead rows
-        never pollute an estimate, and a full (non-incremental) rebuild
-        drops them physically. Same loud-when-stale contract as flat.
+        Lifecycle and concurrency contract: ``_record_file_index``;
+        ``approx_distinct`` merges registers over the LIVE files only
+        and is loud when the index lags them.
 
         Note on deferred deletes: the index is file-physical — pending
         ``delete_where`` predicates are NOT subtracted (HLL cannot
         unsee), so estimates include soft-deleted rows until a
         compact() materializes them and the rebuild drops them."""
         meta = {"p": p, "cols": sorted(cols)}
-        live = self._live_data_files(table)
-        mode = "overwrite"
-        scan: list[str] | None = None
-        new_rel = set(live)
-        if incremental and self.sketch_meta(table) == meta:
-            indexed = self.sketch_indexed_files(table)
-            new_rel = {rel for rel in live if rel not in indexed}
-            if not new_rel:
-                return
-            scan = [live[r] for r in sorted(new_rel)]
-            mode = "append"
-        rows, sketchable = (
-            self._sketch_build(table, meta["cols"], p, scan)
-            if new_rel
-            else (None, [])
-        )
-        schema = "f string, c string, register int, rho int"
-        markers = [(rel, c, -1, 0) for rel in sorted(new_rel) for c in sketchable]
-        out = local_frame(self.spark, markers, schema)
-        if rows is not None:
-            out = rows.unionByName(out)
-        self._write_index(
-            out, mode=mode, n_files=len(new_rel),
-            dest=self._sketch_index_dir(table),
-        )
-        if mode == "append":
-            self._maybe_compact_index(self._sketch_index_dir(table), live)
-        import json
-
-        os.makedirs(self._sketch_dir(table), exist_ok=True)
-        dst = self._sketch_meta_path(table)
-        tmp = dst + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, dst)
-
-    def _refresh_sketch_if_recorded(self, table: str, *, incremental: bool) -> None:
-        meta = self.sketch_meta(table)
-        if not meta:
-            return
-        self.record_sketch(
-            table, meta["cols"], p=meta["p"], incremental=incremental
-        )
+        self._record_file_index(table, "sketch", meta, incremental)
 
     # -- full-text token index (CONTAINS-style file skipping) -------------
     #
-    # Per-file DISTINCT token postings for text columns, same storage
-    # discipline as the Bloom/HLL indexes: a parquet table at
-    # `<table>/_text/index/` with rows (f, c, tok) plus an empty-string
-    # marker row per scanned (file, column) — tokens come from the
-    # canonical whitespace tokenizer (functions/text.py), which never
-    # emits "", so the marker cannot collide. The probe reads ONLY the
-    # term's rows via parquet predicate pushdown; a scanned file without
-    # the term is provably skippable, an unindexed file is
-    # conservatively read. This is grep-at-100TB: a rare-term corpus
-    # lookup touches the index plus the few files that contain the term.
-
-    def _text_dir(self, table: str) -> str:
-        return os.path.join(self.path(table), "_text")
-
-    def _text_meta_path(self, table: str) -> str:
-        return os.path.join(self._text_dir(table), "meta.json")
-
-    def _text_index_dir(self, table: str) -> str:
-        return os.path.join(self._text_dir(table), "index")
+    # Per-file DISTINCT token postings for text columns: rows (f, c,
+    # tok) plus an empty-string marker row per scanned (file, column) —
+    # tokens come from the canonical whitespace tokenizer
+    # (functions/text.py). The probe reads ONLY the term's rows via
+    # parquet predicate pushdown; a scanned file without the term is
+    # provably skippable, an unindexed file is conservatively read.
+    # This is grep-at-100TB: a rare-term corpus lookup touches the index
+    # plus the few files that contain the term.
 
     def text_meta(self, table: str) -> dict | None:
         """The recorded text-index columns ({cols}) or None."""
-        import json
-
-        p = self._text_meta_path(table)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
+        return self._index_meta(table, "text")
 
     def text_indexed_files(self, table: str) -> set[str]:
-        """Relative paths the text index covers — only the ``f`` column
-        leaves the index table."""
-        d = self._text_index_dir(table)
-        if not os.path.isdir(d):
-            return set()
-        import pyarrow.compute as pc
-        import pyarrow.dataset as pads
-
-        names: set[str] = set()
-        for batch in pads.dataset(d, format="parquet").to_batches(columns=["f"]):
-            names.update(pc.unique(batch.column("f")).to_pylist())
-        return names
+        """Relative paths the text index covers."""
+        return self._indexed_files(self._index_path(table, "text", "index"))
 
     def _text_build(
-        self, table: str, cols: list[str], files: list[str] | None
+        self, table: str, meta: dict, files: list[str] | None
     ) -> tuple[DataFrame | None, list[str]]:
         """One scan for all columns: (f, c, tok) DISTINCT token postings
         per file. Reads raw data files, never read() — file-physical,
-        like the Bloom/HLL builds (deferred deletes are not subtracted
-        until materialized)."""
+        like the HLL build (deferred deletes are not subtracted until
+        materialized)."""
         from kafka_connect_bigquery_spark.functions.text import tokens
 
-        tdir = self.path(table)
         src = self._index_scan(table, files)
         if src is None:
             return None, []
-        fields = {f.name: f.dataType for f in src.schema.fields}
-        indexable = [
-            c for c in cols if c in fields and isinstance(fields[c], T.StringType)
-        ]
+        indexable = self._typed_cols(src, meta["cols"], (T.StringType,))
         if not indexable:
             return None, indexable
         entries = F.array(
@@ -2325,74 +2302,18 @@ class Warehouse:
             src.select(F.input_file_name().alias("f"), F.explode(entries).alias("e"))
             .select("f", F.col("e.c").alias("c"), F.explode("e.tk").alias("tok"))
             .distinct()
-            .withColumn(
-                "f",
-                F.expr(
-                    "substring(regexp_replace(f, '^file:(//)?', ''), "
-                    f"{len(tdir) + 2})"
-                ),
-            )
         )
         return rows, indexable
 
     def record_text_index(
         self, table: str, cols: list[str], *, incremental: bool = False
     ) -> None:
-        """Record per-file token postings for text ``cols``. Same
-        lifecycle and concurrency contract as the Bloom index: appends
-        refresh incrementally (new files only), overwrite/compact
-        rebuild, every (f, c) marker lands in the same output file as
-        its token rows (``_write_index``), duplicate rows from racing
-        recorders are identical, and skipping is an optimization —
-        an unindexed file is always read.
-
-        Bucketed MERGE tables (r07 verdict ask 3): per-generation
-        lifecycle — the live set resolves through the generation
-        manifest, every merge commit incrementally indexes the new
-        generations' files, superseded generations' rows go dead in
-        place (``read_containing`` intersects hits with the live
-        manifest, so dead postings are harmless) and a full rebuild
-        drops them physically."""
-        meta = {"cols": sorted(cols)}
-        live = self._live_data_files(table)
-        mode = "overwrite"
-        scan: list[str] | None = None
-        new_rel = set(live)
-        if incremental and self.text_meta(table) == meta:
-            indexed = self.text_indexed_files(table)
-            new_rel = {rel for rel in live if rel not in indexed}
-            if not new_rel:
-                return
-            scan = [live[r] for r in sorted(new_rel)]
-            mode = "append"
-        rows, indexable = (
-            self._text_build(table, meta["cols"], scan) if new_rel else (None, [])
-        )
-        schema = "f string, c string, tok string"
-        markers = [(rel, c, "") for rel in sorted(new_rel) for c in indexable]
-        out = local_frame(self.spark, markers, schema)
-        if rows is not None:
-            out = rows.unionByName(out)
-        self._write_index(
-            out, mode=mode, n_files=len(new_rel),
-            dest=self._text_index_dir(table),
-        )
-        if mode == "append":
-            self._maybe_compact_index(self._text_index_dir(table), live)
-        import json
-
-        os.makedirs(self._text_dir(table), exist_ok=True)
-        dst = self._text_meta_path(table)
-        tmp = dst + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, dst)
-
-    def _refresh_text_if_recorded(self, table: str, *, incremental: bool) -> None:
-        meta = self.text_meta(table)
-        if not meta:
-            return
-        self.record_text_index(table, meta["cols"], incremental=incremental)
+        """Record per-file token postings for text ``cols``. Lifecycle
+        and concurrency contract: ``_record_file_index``; an unindexed
+        file is always read, and on bucketed tables
+        ``read_containing`` intersects hits with the live manifest, so
+        dead postings are harmless."""
+        self._record_file_index(table, "text", {"cols": sorted(cols)}, incremental)
 
     def read_containing(self, table: str, col: str, term: str) -> DataFrame:
         """All rows whose ``col`` contains ``term`` as a whole token —
@@ -2423,7 +2344,7 @@ class Warehouse:
         for term in terms:
             pred = pred & F.array_contains(toks, term)
         meta = self.text_meta(table)
-        idx = self._text_index_dir(table)
+        idx = self._index_path(table, "text", "index")
         if (
             not terms
             or any(not t for t in terms)
@@ -2507,7 +2428,7 @@ class Warehouse:
                 "record_sketch first"
             )
         live = set(self._live_data_files(table))
-        if not os.path.isdir(self._sketch_index_dir(table)):
+        if not os.path.isdir(self._index_path(table, "sketch", "index")):
             raise WarehouseError(
                 f"HLL sketch for {table} lags the data: {len(live)} "
                 "unindexed file(s); run record_sketch(incremental=True)"
@@ -2516,7 +2437,7 @@ class Warehouse:
             self.spark,
             [(r,) for r in sorted(live)], "f string"
         )
-        idx = self.spark.read.parquet(self._sketch_index_dir(table))
+        idx = self.spark.read.parquet(self._index_path(table, "sketch", "index"))
         # staleness check EXECUTOR-side (r09: previously a pyarrow loop
         # pulled every indexed file name into a driver set): live files
         # with no index row at all, counted via anti-join — only the
@@ -2551,8 +2472,8 @@ class Warehouse:
     # Completes the data-skipping index family for the one remaining
     # modality: bloom answers equality, zone maps answer ranges, HLL
     # answers distinct counts, text postings answer CONTAINS — this
-    # answers "nearest vectors to q". Storage discipline is identical:
-    # a parquet table at `<table>/_ann/index/` with one row per
+    # answers "nearest vectors to q". The index table
+    # `<table>/_ann/index/` holds one row per
     # (file, list_id) — WHICH inverted lists (operators/ann.py IVF,
     # nearest of the frozen coarse-quantizer centroids) each data file
     # contains — plus a `list_id = -1` marker row per scanned file. The
@@ -2575,61 +2496,24 @@ class Warehouse:
 
     ANN_LISTS = 8
 
-    def _ann_dir(self, table: str) -> str:
-        return os.path.join(self.path(table), "_ann")
-
-    def _ann_meta_path(self, table: str) -> str:
-        return os.path.join(self._ann_dir(table), "meta.json")
-
-    def _ann_index_dir(self, table: str) -> str:
-        return os.path.join(self._ann_dir(table), "index")
-
-    def _ann_codes_dir(self, table: str) -> str:
-        return os.path.join(self._ann_dir(table), "codes")
-
     def ann_meta(self, table: str) -> dict | None:
         """The recorded ANN index parameters
         ({col, id_col, n_lists, iters, centroids}) or None."""
-        import json
-
-        p = self._ann_meta_path(table)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
+        return self._index_meta(table, "ann")
 
     def ann_indexed_files(self, table: str) -> set[str]:
-        """Relative paths the ANN index covers — only the ``f`` column
-        leaves the index table (column pruning)."""
-        d = self._ann_index_dir(table)
-        if not os.path.isdir(d):
-            return set()
-        import pyarrow.compute as pc
-        import pyarrow.dataset as pads
-
-        names: set[str] = set()
-        for batch in pads.dataset(d, format="parquet").to_batches(columns=["f"]):
-            names.update(pc.unique(batch.column("f")).to_pylist())
-        return names
+        """Relative paths the ANN membership index covers."""
+        return self._indexed_files(self._index_path(table, "ann", "index"))
 
     def ann_encoded_files(self, table: str) -> set[str]:
         """Relative paths the PQ codes index covers (marker rows make an
         encoded-but-vectorless file distinguishable from an unencoded
         one). Empty when the index was recorded without PQ."""
-        d = self._ann_codes_dir(table)
-        if not os.path.isdir(d):
-            return set()
-        import pyarrow.compute as pc
-        import pyarrow.dataset as pads
-
-        names: set[str] = set()
-        for batch in pads.dataset(d, format="parquet").to_batches(columns=["f"]):
-            names.update(pc.unique(batch.column("f")).to_pylist())
-        return names
+        return self._indexed_files(self._index_path(table, "ann", "codes"))
 
     def _ann_codes_build(
         self, table: str, meta: dict, files: list[str] | None
-    ) -> tuple[DataFrame | None, bool]:
+    ) -> tuple[DataFrame | None, list[str]]:
         """One raw-file scan producing the PER-ROW PQ codes index:
         (f, list_id, nid, codes) — ``codes`` is the m-int residual
         product-quantization of the row's vector against the FROZEN
@@ -2642,13 +2526,12 @@ class Warehouse:
         codes row (they can never match a probe)."""
         from kafka_connect_bigquery_spark.operators import ann as ANN
 
-        tdir = self.path(table)
         src = self._index_scan(table, files)
         if src is None:
-            return None, False
+            return None, []
         col, id_col = meta["col"], meta["id_col"]
         if col not in src.columns or id_col not in src.columns:
-            return None, False
+            return None, []
         m = meta["pq_m"]
         dsub = len(meta["codebooks"][0][0])
         cents_q_lit = ANN._ilit_matrix(
@@ -2675,34 +2558,26 @@ class Warehouse:
                 ),
             )
             .drop("__v")
-            .withColumn(
-                "f",
-                F.expr(
-                    "substring(regexp_replace(f, '^file:(//)?', ''), "
-                    f"{len(tdir) + 2})"
-                ),
-            )
         )
-        return rows, True
+        return rows, [col]
 
     def _ann_build(
         self, table: str, meta: dict, files: list[str] | None
-    ) -> tuple[DataFrame | None, bool]:
+    ) -> tuple[DataFrame | None, list[str]]:
         """One raw-file scan: DISTINCT (f, list_id) membership rows —
         which inverted lists each file contains. Assignment uses the
         SAME integer-quantized argmin as operators/ann.py::assign_list,
         so build-time membership, probe-time re-assignment, and the SQL
         oracles are bit-identical. NULL vectors join no list (they can
-        never match a probe). Returns (rows, indexable)."""
+        never match a probe)."""
         from kafka_connect_bigquery_spark.operators import ann as ANN
 
-        tdir = self.path(table)
         src = self._index_scan(table, files)
         if src is None:
-            return None, False
+            return None, []
         col = meta["col"]
         if col not in src.columns:
-            return None, False
+            return None, []
         rows = (
             src.select(
                 F.input_file_name().alias("f"),
@@ -2710,15 +2585,8 @@ class Warehouse:
             )
             .filter(F.col("list_id").isNotNull())
             .distinct()
-            .withColumn(
-                "f",
-                F.expr(
-                    "substring(regexp_replace(f, '^file:(//)?', ''), "
-                    f"{len(tdir) + 2})"
-                ),
-            )
         )
-        return rows, True
+        return rows, [col]
 
     def record_ann(
         self,
@@ -2749,16 +2617,9 @@ class Warehouse:
         files against the same centroids (identical data must keep an
         identical quantizer), and ``overwrite`` retrains (the corpus
         was re-stated). Pass ``centroids`` to adopt a quantizer
-        verbatim (the compact/clone rebuild path).
-
-        Same lifecycle and concurrency contract as the Bloom/text
-        indexes: per-generation on bucketed MERGE tables (live set via
-        the generation manifest, dead generations' rows ignored by the
-        probe, dropped on rebuild), no lock held across the Spark
-        build, duplicate rows from racing recorders identical, markers
-        land with their membership rows in one output file
-        (``_write_index``), and a torn build only costs pruning power —
-        ``read_nearest`` reads unindexed files conservatively.
+        verbatim. Lifecycle and concurrency contract:
+        ``_record_file_index``; ``read_nearest`` reads unindexed files
+        conservatively.
 
         ``pq_m`` additionally persists a PER-ROW product-quantization
         codes index (``_ann/codes/``: m 4-to-8-bit codes per vector —
@@ -2768,18 +2629,13 @@ class Warehouse:
         codebooks FREEZE with the centroids). :meth:`read_nearest_pq`
         then generates its ADC shortlist from stored codes — m ints per
         candidate instead of the full embedding — and opens the raw
-        vector column only for the exact re-rank. Same incremental
-        lifecycle as the membership rows: appends encode new files
-        against the frozen codebooks, compaction re-encodes rewritten
-        files, overwrite retrains. Pass ``codebooks`` to adopt them
-        verbatim (the compact/clone rebuild path)."""
+        vector column only for the exact re-rank. The codes table keeps
+        its own freshness: appends encode new files against the frozen
+        codebooks, and a torn codes build heals on the next refresh.
+        Pass ``codebooks`` to adopt them verbatim."""
         from kafka_connect_bigquery_spark.operators import ann as ANN
 
-        live = self._live_data_files(table)
         prior = self.ann_meta(table)
-        mode = "overwrite"
-        scan: list[str] | None = None
-        new_rel = set(live)
         if (
             incremental
             and prior
@@ -2790,24 +2646,8 @@ class Warehouse:
             and (pq_m is None or prior.get("pq_ksub") == pq_ksub)
         ):
             meta = prior  # frozen quantizer
-            indexed = self.ann_indexed_files(table)
-            new_rel = {rel for rel in live if rel not in indexed}
-            # codes freshness is tracked SEPARATELY from membership: a
-            # torn codes build (membership rows landed, codes write
-            # died) leaves files in `indexed` but not in the codes
-            # table, so keying the codes scan on new_rel would never
-            # backfill them — every probe would re-encode those files
-            # from the raw column forever. Derive the codes scan set
-            # from live - encoded so the next refresh heals the tear.
-            codes_rel: set[str] = set()
-            if pq_m is not None:
-                encoded = self.ann_encoded_files(table)
-                codes_rel = {rel for rel in live if rel not in encoded}
-            if not new_rel and not codes_rel:
-                return
-            scan = [live[r] for r in sorted(new_rel)]
-            mode = "append"
         else:
+            incremental = False
             src = self.read(table).filter(F.col(col).isNotNull())
             if centroids is None:
                 centroids = (
@@ -2841,88 +2681,7 @@ class Warehouse:
                 meta["pq_m"] = pq_m
                 meta["pq_ksub"] = pq_ksub
                 meta["codebooks"] = codebooks
-        if mode == "overwrite" or new_rel:
-            rows, indexable = (
-                self._ann_build(table, meta, scan) if new_rel else (None, False)
-            )
-            schema = "f string, list_id int"
-            markers = (
-                [(rel, -1) for rel in sorted(new_rel)] if indexable else []
-            )
-            out = local_frame(self.spark, markers, schema)
-            if rows is not None:
-                out = rows.unionByName(out)
-            self._write_index(
-                out, mode=mode, n_files=len(new_rel),
-                dest=self._ann_index_dir(table),
-            )
-            if mode == "append":
-                self._maybe_compact_index(self._ann_index_dir(table), live)
-        if meta.get("pq_m") is not None:
-            if mode == "overwrite":
-                codes_rel = set(new_rel)
-            codes_scan = (
-                [live[r] for r in sorted(codes_rel)]
-                if mode == "append"
-                else scan
-            )
-            crows, cindexable = (
-                self._ann_codes_build(table, meta, codes_scan)
-                if codes_rel
-                else (None, False)
-            )
-            cschema = "f string, list_id int, nid long, codes array<int>"
-            cmarkers = (
-                [(rel, -1, None, None) for rel in sorted(codes_rel)]
-                if cindexable
-                else []
-            )
-            cout = local_frame(self.spark, cmarkers, cschema)
-            if crows is not None:
-                cout = crows.unionByName(cout)
-            self._write_index(
-                cout, mode=mode, n_files=len(codes_rel),
-                dest=self._ann_codes_dir(table),
-            )
-            if mode == "append":
-                self._maybe_compact_index(self._ann_codes_dir(table), live)
-        elif mode == "overwrite" and os.path.isdir(self._ann_codes_dir(table)):
-            # re-recorded without PQ: a stale codes table must not
-            # survive under fresh meta (read_nearest_pq would raise on
-            # the missing pq keys anyway, but dead bytes invite misuse)
-            import shutil
-
-            shutil.rmtree(self._ann_codes_dir(table), ignore_errors=True)
-        import json
-
-        os.makedirs(self._ann_dir(table), exist_ok=True)
-        dst = self._ann_meta_path(table)
-        tmp = dst + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, dst)
-
-    def _refresh_ann_if_recorded(
-        self, table: str, *, incremental: bool,
-        keep_centroids: bool = True,
-    ) -> None:
-        meta = self.ann_meta(table)
-        if not meta:
-            return
-        self.record_ann(
-            table,
-            meta["col"],
-            id_col=meta["id_col"],
-            n_lists=meta["n_lists"],
-            kmeans_iters=meta["iters"],
-            incremental=incremental,
-            centroids=meta["centroids"] if keep_centroids else None,
-            pq_m=meta.get("pq_m"),
-            pq_ksub=meta.get("pq_ksub", 16),
-            # codebooks freeze with the centroids (compact: identical
-            # data keeps an identical encoder); overwrite retrains both
-            codebooks=meta.get("codebooks") if keep_centroids else None,
-        )
+        self._record_file_index(table, "ann", meta, incremental)
 
     @staticmethod
     def _ann_probe_lists(
@@ -3241,7 +3000,7 @@ class Warehouse:
                 [(r,) for r in sorted(enc_rel)], "f string"
             )
             parts.append(
-                self.spark.read.parquet(self._ann_codes_dir(table))
+                self.spark.read.parquet(self._index_path(table, "ann", "codes"))
                 .filter(F.col("list_id").isin(probes))  # drops -1 markers
                 .join(enc_df, "f", "left_semi")
                 .select("nid", "list_id", "codes")
@@ -3624,7 +3383,7 @@ class Warehouse:
         family's probe shape since r09); only the keep list, which the
         parquet read materializes anyway, reaches the driver."""
         live = self._live_data_files(table)
-        idx = self._ann_index_dir(table)
+        idx = self._index_path(table, "ann", "index")
         if not os.path.isdir(idx):
             return None, live
         skip_df = (
@@ -3729,7 +3488,7 @@ class Warehouse:
         # full bitmaps are never read, let alone driver-materialized
         words: dict[tuple, int] = {}
         scanned: set[tuple] = set()
-        if probes and os.path.isdir(self._bloom_index_dir(table)):
+        if probes and os.path.isdir(self._index_path(table, "bloom", "index")):
             import pyarrow.dataset as pads
 
             expr = None
@@ -3737,7 +3496,7 @@ class Warehouse:
                 ws = sorted({p // 64 for p in positions}) + [-1]
                 e = (pads.field("c") == col) & pads.field("w").isin(ws)
                 expr = e if expr is None else (expr | e)
-            ds = pads.dataset(self._bloom_index_dir(table), format="parquet")
+            ds = pads.dataset(self._index_path(table, "bloom", "index"), format="parquet")
             for batch in ds.to_batches(
                 columns=["f", "c", "w", "bits"], filter=expr
             ):
@@ -3964,10 +3723,7 @@ class Warehouse:
         # documented loud/conservative state, healed by the next refresh
         if spec.clustering:
             self._record_zonemap(table, incremental=True)
-        self._refresh_bloom_if_recorded(table, incremental=True)
-        self._refresh_sketch_if_recorded(table, incremental=True)
-        self._refresh_text_if_recorded(table, incremental=True)
-        self._refresh_ann_if_recorded(table, incremental=True)
+        self._refresh_indexes(table, incremental=True)
 
     def overwrite(self, df: DataFrame, table: str, spec: TableSpec | None = None) -> None:
         spec = spec or TableSpec()
@@ -3994,14 +3750,11 @@ class Warehouse:
             if k not in ("generations", "generation", "deferred_deletes")
         }
         meta["schema"] = out.schema.json()
-        # the bloom recording lives INSIDE the table dir the swap
-        # replaces — capture it first, rebuild after, or an overwrite
-        # silently drops the user's point-lookup index (the docstring
-        # promise is rebuild, not vanish)
-        bloom = self.bloom_meta(table)
-        sketch = self.sketch_meta(table)
-        text = self.text_meta(table)
-        ann = self.ann_meta(table)
+        # the index recordings live INSIDE the table dir the swap
+        # replaces — capture them first, rebuild after, or an overwrite
+        # silently drops the user's indexes (the promise is rebuild, not
+        # vanish)
+        recorded = self._recorded_indexes(table)
         # the swap runs under the table's commit lock: append holds the
         # same lock across its move-files+record section, so a racing
         # append serializes to entirely-before (its files are listed,
@@ -4035,15 +3788,8 @@ class Warehouse:
             self._write_layout_meta(table, meta)
         if spec.clustering:
             self._record_zonemap(table)
-        if bloom:
-            self.record_bloom(
-                table, bloom["cols"], m_bits=bloom["m"],
-                k_hashes=bloom["k"], incremental=False,
-            )
-        if sketch:
-            self.record_sketch(table, sketch["cols"], p=sketch["p"])
-        if text:
-            self.record_text_index(table, text["cols"])
+        ann = recorded.pop("ann", None)
+        self._refresh_indexes(table, incremental=False, recorded=recorded)
         if ann:
             # retrain the quantizer: an overwrite re-states the corpus,
             # so centroids seeded from the old rows no longer describe
@@ -4060,9 +3806,9 @@ class Warehouse:
                         pq_ksub=ann.get("pq_ksub", 16),
                     )
                 except WarehouseError:  # no non-null vectors to seed from
-                    shutil.rmtree(self._ann_dir(table), ignore_errors=True)
+                    shutil.rmtree(self._index_path(table, "ann"), ignore_errors=True)
             else:
-                shutil.rmtree(self._ann_dir(table), ignore_errors=True)
+                shutil.rmtree(self._index_path(table, "ann"), ignore_errors=True)
         self._log_op(
             table, "overwrite", n_columns=len(out.columns), checkpoint=True
         )
@@ -4341,10 +4087,7 @@ class Warehouse:
         #    about it, read_containing conservatively reads unindexed
         #    files, and the next commit's refresh covers the gap (it
         #    indexes live-minus-indexed, not just its own writes). -----
-        self._refresh_bloom_if_recorded(table, incremental=True)
-        self._refresh_sketch_if_recorded(table, incremental=True)
-        self._refresh_text_if_recorded(table, incremental=True)
-        self._refresh_ann_if_recorded(table, incremental=True)
+        self._refresh_indexes(table, incremental=True)
 
     def _gc_stale(self, table: str, gens: dict[str, object]) -> int:
         """Remove generation dirs that neither the live manifest nor any
@@ -4653,12 +4396,9 @@ class Warehouse:
             writer = writer.partitionBy(*part_cols)
         writer.parquet(tmp)
         final = self.path(table)
-        # same swap-survival contract as overwrite(): the bloom
-        # recording is inside the dir being replaced
-        bloom = self.bloom_meta(table)
-        sketch = self.sketch_meta(table)
-        text = self.text_meta(table)
-        ann = self.ann_meta(table)
+        # same swap-survival contract as overwrite(): the index
+        # recordings are inside the dir being replaced
+        recorded = self._recorded_indexes(table)
         # optimistic concurrency for the flat rewrite (the flat twin of
         # _commit_bucket_generations' base-generation check): compact's
         # contract is PRESERVE ALL DATA, so if any commit landed after
@@ -4706,27 +4446,10 @@ class Warehouse:
                 self._write_layout_meta(table, meta)
         if spec.clustering:
             self._record_zonemap(table)
-        if bloom:
-            self.record_bloom(
-                table, bloom["cols"], m_bits=bloom["m"],
-                k_hashes=bloom["k"], incremental=False,
-            )
-        if sketch:
-            self.record_sketch(table, sketch["cols"], p=sketch["p"])
-        if text:
-            self.record_text_index(table, text["cols"])
-        if ann:
-            # same rows, new files: keep the frozen quantizer (identical
-            # data must keep an identical list semantics — and identical
-            # PQ codebooks) and re-index the rewritten files against it
-            self.record_ann(
-                table, ann["col"], id_col=ann["id_col"],
-                n_lists=ann["n_lists"], kmeans_iters=ann["iters"],
-                centroids=ann["centroids"],
-                pq_m=ann.get("pq_m"),
-                pq_ksub=ann.get("pq_ksub", 16),
-                codebooks=ann.get("codebooks"),
-            )
+        # rebuilding from the recorded meta verbatim keeps the ANN
+        # quantizer frozen: same rows, new files — identical data must
+        # keep identical list semantics and identical PQ codebooks
+        self._refresh_indexes(table, incremental=False, recorded=recorded)
         self._log_op(
             table, "compact", files_before=len(files), files_after=n_out,
             checkpoint=True,
@@ -4853,10 +4576,7 @@ class Warehouse:
         shutil.rmtree(tmp, ignore_errors=True)
         if spec.clustering:
             self._record_zonemap(table, incremental=True)
-        self._refresh_bloom_if_recorded(table, incremental=True)
-        self._refresh_sketch_if_recorded(table, incremental=True)
-        self._refresh_text_if_recorded(table, incremental=True)
-        self._refresh_ann_if_recorded(table, incremental=True)
+        self._refresh_indexes(table, incremental=True)
         return len(old)
 
     def plan_compaction(

@@ -590,7 +590,7 @@ def test_pq_torn_codes_build_heals_on_next_refresh(spark, tmp_path):
     # and the healed state is stable: another tick is a no-op
     import os as _os
 
-    before = sorted(_os.listdir(wh._ann_codes_dir("vecs")))
+    before = sorted(_os.listdir(wh._index_path("vecs", "ann", "codes")))
     wh.record_ann(
         "vecs",
         "embedding",
@@ -600,7 +600,7 @@ def test_pq_torn_codes_build_heals_on_next_refresh(spark, tmp_path):
         pq_ksub=16,
         incremental=True,
     )
-    assert sorted(_os.listdir(wh._ann_codes_dir("vecs"))) == before
+    assert sorted(_os.listdir(wh._index_path("vecs", "ann", "codes"))) == before
 
 
 def test_pq_compact_and_optimize_keep_codebooks_and_results(spark, tmp_path):
@@ -661,11 +661,11 @@ def test_pq_loud_when_missing_and_rerecord_without_pq_drops_codes(spark, tmp_pat
     wh.record_ann(
         "vecs", "embedding", id_col="vec_id", n_lists=4, pq_m=2, pq_ksub=8
     )
-    assert _os.path.isdir(wh._ann_codes_dir("vecs"))
+    assert _os.path.isdir(wh._index_path("vecs", "ann", "codes"))
     assert wh.read_nearest_pq("vecs", "embedding", _corner(1), k=3).count() == 3
     # re-record WITHOUT pq: stale codes must not survive under new meta
     wh.record_ann("vecs", "embedding", id_col="vec_id", n_lists=4)
-    assert not _os.path.isdir(wh._ann_codes_dir("vecs"))
+    assert not _os.path.isdir(wh._index_path("vecs", "ann", "codes"))
     with pytest.raises(WarehouseError, match="no PQ codes"):
         wh.read_nearest_pq("vecs", "embedding", _corner(1), k=3)
 

@@ -90,7 +90,7 @@ def test_sketch_dead_generation_rows_do_not_pollute(spark, wh):
     # shrink the live value set: rewrite every key's val to ONE value
     upd = [(i, "x", "only", 1, False) for i in range(100)]
     wh.merge(_batch(spark, upd), "t", ["k"], mode="upsert_delete", spec=BUCKETED)
-    idx = spark.read.parquet(wh._sketch_index_dir("t"))
+    idx = spark.read.parquet(wh._index_path("t", "sketch", "index"))
     live = set(wh._live_data_files("t"))
     dead_rows = idx.filter(~F.col("f").isin(list(live))).count()
     assert dead_rows > 0, "test premise: dead generation rows present"
@@ -107,7 +107,7 @@ def test_sketch_lagging_index_is_loud_then_heals(spark, wh, monkeypatch):
     wh.record_sketch("t", ["val"])
     # simulate the crash: suppress the refresh hook for one commit
     monkeypatch.setattr(
-        Warehouse, "_refresh_sketch_if_recorded", lambda self, t, incremental: None
+        Warehouse, "_refresh_indexes", lambda self, t, incremental: None
     )
     wh.merge(
         _batch(spark, [(0, "x", "zz", 1, False)]), "t", ["k"],
@@ -161,7 +161,7 @@ def test_text_unindexed_generation_read_conservatively(spark, wh, monkeypatch):
     wh.merge(_batch(spark, rows), "t", ["k"], mode="upsert_delete", spec=BUCKETED)
     wh.record_text_index("t", ["body"])
     monkeypatch.setattr(
-        Warehouse, "_refresh_text_if_recorded", lambda self, t, incremental: None
+        Warehouse, "_refresh_indexes", lambda self, t, incremental: None
     )
     wh.merge(
         _batch(spark, [(1, "beta now", "v", 1, False), (40, "alpha too", "v", 1, False)]),
@@ -270,7 +270,7 @@ def test_incremental_index_self_compacts(spark, wh, monkeypatch):
             "t", ["k"], mode="upsert_delete", spec=BUCKETED,
         )
         vals = (vals - {f"v{k}"}) | {f"u{step}"}
-    for dest in (wh._sketch_index_dir("t"), wh._text_index_dir("t")):
+    for dest in (wh._index_path("t", "sketch", "index"), wh._index_path("t", "text", "index")):
         n_files = len(glob.glob(os.path.join(dest, "*.parquet")))
         assert n_files <= 4, (dest, n_files)
         live = set(wh._live_data_files("t"))

@@ -243,7 +243,7 @@ def test_bloom_incremental_refresh_on_append(spark, tmp_path):
     wh.record_bloom("t", ["id"])
     before = wh.bloom_indexed_files("t")
     index_files_before = set(
-        _glob.glob(f"{wh._bloom_index_dir('t')}/*.parquet")
+        _glob.glob(f"{wh._index_path('t', 'bloom', 'index')}/*.parquet")
     )
     assert before and index_files_before
 
@@ -257,7 +257,7 @@ def test_bloom_incremental_refresh_on_append(spark, tmp_path):
     assert after > before  # strictly more files indexed, old ones kept
     # incremental refresh APPENDED to the parquet index: the original
     # index part files are untouched (no rebuild of old bitmaps)
-    index_files_after = set(_glob.glob(f"{wh._bloom_index_dir('t')}/*.parquet"))
+    index_files_after = set(_glob.glob(f"{wh._index_path('t', 'bloom', 'index')}/*.parquet"))
     assert index_files_after > index_files_before
 
     found = wh.read_pruned_where("t", {"id": 10_007})
@@ -277,7 +277,7 @@ def test_bloom_index_is_parquet_and_invisible_to_data_paths(spark, tmp_path):
     # index parquet exists on disk...
     import glob as _glob
 
-    assert _glob.glob(f"{wh._bloom_index_dir('t')}/*.parquet")
+    assert _glob.glob(f"{wh._index_path('t', 'bloom', 'index')}/*.parquet")
     # ...but row counts, byte totals, and file counts are unchanged
     assert wh.read("t").count() == n_rows
     assert wh.table_bytes("t") == bytes_before

@@ -195,7 +195,7 @@ def test_full_rebuild_fans_out_when_table_has_many_files(spark, wh, monkeypatch)
     n_table_files = len(Warehouse._data_files(wh.path("t")))
     assert n_table_files >= 5
     wh.record_sketch("t", ["k"])  # full build over >threshold files
-    idx_dir = wh._sketch_index_dir("t")
+    idx_dir = wh._index_path("t", "sketch", "index")
     idx_files = glob.glob(os.path.join(idx_dir, "*.parquet"))
     assert len(idx_files) > 1, "full rebuild still single-task"
     assert _est(wh, "k") == _direct(wh, "k") == py_hll_estimate(
@@ -234,7 +234,7 @@ def test_bloom_full_rebuild_fans_out_and_probes_stay_exact(spark, wh, monkeypatc
             PLAIN,
         )
     wh.record_bloom("t", ["k"])
-    idx_files = glob.glob(os.path.join(wh._bloom_index_dir("t"), "*.parquet"))
+    idx_files = glob.glob(os.path.join(wh._index_path("t", "bloom", "index"), "*.parquet"))
     assert len(idx_files) > 1
     for key in (0, 11, 24, 999):
         got = {r["k"] for r in wh.read_pruned_where("t", {"k": key}).collect()}

@@ -46,7 +46,7 @@ def test_contains_matches_plain_filter_and_skips_files(spark, tmp_path):
     for term in ("beta", "epsilon", "missing", "alpha"):
         assert _got(wh, term) == _want(wh, term)
     # the skipping is real: a term confined to one file reads one file
-    idx = wh._text_index_dir("t")
+    idx = wh._index_path("t", "text", "index")
     assert os.path.isdir(idx)
     import pyarrow.dataset as pads
 
@@ -79,7 +79,7 @@ def test_incremental_append_refresh_and_unindexed_conservative(spark, tmp_path):
     # fallback equals the plain filter.
     import shutil
 
-    shutil.rmtree(wh._text_dir("t"))
+    shutil.rmtree(wh._index_path("t", "text"))
     assert _got(wh, "omega") == {2}
 
 
