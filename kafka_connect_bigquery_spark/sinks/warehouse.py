@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_connect_bigquery_spark.schema.evolution import evolve, unionize
+from kafka_connect_bigquery_spark.sinks.bucket_hash import bucket_column, key_bucket
 
 Grain = Literal["HOUR", "DAY", "MONTH", "YEAR", "NONE"]
 
@@ -1738,8 +1739,8 @@ class Warehouse:
                 lambda f, c: (f, -1), "_ann_build",
             ),
             _IndexTable(
-                "codes", "f string, list_id int, nid long, codes array<int>",
-                lambda f, c: (f, -1, None, None), "_ann_codes_build",
+                "codes", "f string, nid long, list_id int, codes array<int>",
+                lambda f, c: (f, None, -1, None), "_ann_codes_build",
                 when=lambda meta: meta.get("pq_m") is not None,
             ),
         )),
@@ -2515,7 +2516,7 @@ class Warehouse:
         self, table: str, meta: dict, files: list[str] | None
     ) -> tuple[DataFrame | None, list[str]]:
         """One raw-file scan producing the PER-ROW PQ codes index:
-        (f, list_id, nid, codes) — ``codes`` is the m-int residual
+        (f, nid, list_id, codes) — ``codes`` is the m-int residual
         product-quantization of the row's vector against the FROZEN
         codebooks (operators/ann.py::_pq_codes, the same expressions
         ivfpq_topk encodes with, so stored codes and a from-scratch
@@ -3431,6 +3432,28 @@ class Warehouse:
             return self.read(table)
         return self.read_pruned_where(table, {col: (lo, hi)})
 
+    @staticmethod
+    def _key_bucket(layout: dict, ranges: dict) -> int | None:
+        """The one bucket that can hold rows matching ``ranges``, or None
+        when the read cannot prune by key: a flat table, a manifest
+        without a schema, a key column with no equality predicate or a
+        NULL literal, or a key type or literal the hash port does not
+        cover."""
+        key_cols = layout.get("key_cols")
+        stored = _manifest_schema(layout)
+        if layout.get("generations") is None or not key_cols or stored is None:
+            return None
+        types = {f.name: f.dataType for f in stored.fields}
+        values = []
+        for c in key_cols:
+            lo, hi = ranges.get(c, (None, None))
+            if lo is None or type(lo) is not type(hi) or lo != hi or c not in types:
+                return None
+            values.append(lo)
+        return key_bucket(
+            values, [types[c] for c in key_cols], int(layout["key_bucket_count"])
+        )
+
     def read_pruned_where(self, table: str, predicates: dict) -> DataFrame:
         """Multi-column zone-map pruning: a CONJUNCTION of equality /
         range predicates — ``{col: value}`` or ``{col: (lo, hi)}`` per
@@ -3442,6 +3465,18 @@ class Warehouse:
         narrow in the leading one). Equality predicates additionally
         probe the per-file Bloom filters when ``record_bloom`` has run —
         membership pruning on columns the layout is NOT sorted by.
+        On a bucketed MERGE table, equality on EVERY key column first
+        prunes to the one bucket the key hashes to
+        (``pmod(hash(keys), n)``, computed on the driver by
+        ``sinks/bucket_hash.py`` — zero Spark jobs), so the read lists
+        one generation dir, which every bucket writer leaves as ONE
+        file; a key whose bucket holds no rows reads as an empty frame
+        without touching a file. A Bloom index on a non-key column then
+        still prunes inside the bucket. Key types covered:
+        boolean, byte, short, int, long, date, timestamp, binary and
+        UTF8_BINARY string, each with a literal of the matching Python
+        type. Any other key type, a NULL literal, a range on a key
+        column, or a manifest without a schema reads every bucket.
         Result is exactly ``read(table).filter(AND of predicates)``
         regardless of zone-map/bloom state."""
         import json
@@ -3458,6 +3493,20 @@ class Warehouse:
         # not range-clustered) but DO carry the per-generation bloom
         # index (r08) — equality probes on NON-key columns prune there
         layout = self.layout_meta(table)
+        bucket = self._key_bucket(layout, ranges)
+        if bucket is not None:
+            # the key's bucket is the only one that can hold a match:
+            # narrow the live set to it before the bloom loop below
+            gen = layout["generations"].get(str(bucket))
+            if gen is None:
+                return local_frame(
+                    self.spark, [], _manifest_schema(layout)
+                ).filter(pred)
+            layout = {**layout, "generations": {str(bucket): gen}}
+            if not bloom_meta:
+                return self._read_stored(
+                    [self._bucket_gen_dir(table, bucket, gen)], layout
+                ).filter(pred)
         have_zm = (
             os.path.exists(self._zonemap_path(table))
             and layout.get("generations") is None
@@ -3979,6 +4028,22 @@ class Warehouse:
             except OSError:
                 pass
 
+    def _write_bucket_generations(
+        self, df: DataFrame, tmp: str, spec: TableSpec | None = None
+    ) -> None:
+        """Stage ``df`` (carrying ``__bucket``) under ``tmp`` as
+        ``__bucket=<b>/`` dirs for :meth:`_commit_bucket_generations` —
+        the one writer of bucket generations. Repartitioning on the
+        bucket id puts each bucket's rows in one task, so every new
+        generation is ONE file: a key-bucket point read opens one file,
+        and the merge's multi-task plan (a union of an anti-join and a
+        window) no longer scatters a bucket over 3–4 files. No partition
+        count is given, so AQE still coalesces small shuffles."""
+        out = df.repartition("__bucket")
+        if spec is not None:
+            out = self._sorted_within(out, spec)
+        out.write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
+
     def _commit_bucket_generations(
         self,
         table: str,
@@ -4186,15 +4251,22 @@ class Warehouse:
         """
         from kafka_connect_bigquery_spark.operators import merge as M
 
-        bucket_expr = F.pmod(F.hash(*[F.col(c) for c in key_cols]), F.lit(n_buckets))
+        bucket_expr = bucket_column(key_cols, n_buckets)
         drop_helpers = [c for c in (order_col, tombstone_col) if c in batch.columns]
         batch = batch.withColumn("__bucket", bucket_expr)
 
         if not self.exists(table):
-            first = _first_batch_state(batch, key_cols, mode, order_col, tombstone_col)
+            # dedupe per (bucket, key) — the same groups, as the bucket
+            # is a function of the key — over rows already partitioned
+            # by bucket: the writer's repartition on the bucket id then
+            # matches this exchange and Spark drops it
+            first = _first_batch_state(
+                batch.repartition("__bucket"), ["__bucket", *key_cols],
+                mode, order_col, tombstone_col,
+            )
             out_first = first.drop(*drop_helpers)
             tmp = self.path(f".tmp_{table}_{uuid.uuid4().hex[:8]}")
-            out_first.write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
+            self._write_bucket_generations(out_first, tmp)
             # base_gen=-1: this writer saw no table; if a concurrent
             # first-writer commits gen 0 meanwhile, the check aborts us
             self._commit_bucket_generations(
@@ -4212,7 +4284,7 @@ class Warehouse:
         if meta.get("generations") is None:
             migrated = self.read(table).withColumn("__bucket", bucket_expr)
             tmp = self.path(f".tmp_{table}_{uuid.uuid4().hex[:8]}")
-            migrated.write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
+            self._write_bucket_generations(migrated, tmp)
             self._commit_bucket_generations(
                 table, tmp, list(range(n_buckets)), n_buckets=n_buckets,
                 key_cols=key_cols, base_gen=int(meta.get("generation", -1)),
@@ -4285,7 +4357,7 @@ class Warehouse:
             )
         merged = merged.withColumn("__bucket", bucket_expr)
         tmp = self.path(f".tmp_{table}_{uuid.uuid4().hex[:8]}")
-        merged.write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
+        self._write_bucket_generations(merged, tmp)
         self._commit_bucket_generations(
             table, tmp, touched, n_buckets=n_buckets, key_cols=key_cols,
             base_gen=base_gen,
@@ -4312,7 +4384,8 @@ class Warehouse:
         """Small-file compaction (the OPTIMIZE analog): streaming
         appends leave one file per micro-batch per partition; rewrite
         the table into ~target_file_rows-sized files, preserving the
-        partition layout and clustering sort.
+        partition layout and clustering sort. A bucketed MERGE table
+        rewrites to one file per bucket, whatever ``target_file_rows``.
 
         Returns the number of files before compaction (0 = skipped).
         At scale this runs per-partition on a schedule — that form is
@@ -4345,33 +4418,29 @@ class Warehouse:
             # columns (self-healing: after compaction the footers and
             # the logical schema agree again)
             df = self._read_stored(paths, meta)
-        else:
-            df = self.read(table)
+            # recompute the bucket id from the persisted key columns and
+            # republish every bucket as a new one-file generation (same
+            # crash-safe commit as a merge); the file count is the
+            # bucket count, so no row count is needed
+            key_cols = meta["key_cols"]
+            n_buckets = int(meta["key_bucket_count"])
+            bucket_expr = bucket_column(key_cols, n_buckets)
+            tmp = self.path(f".tmp_{table}_{uuid.uuid4().hex[:8]}")
+            self._write_bucket_generations(
+                df.withColumn("__bucket", bucket_expr), tmp, spec
+            )
+            self._commit_bucket_generations(
+                table, tmp, list(range(n_buckets)), n_buckets=n_buckets,
+                key_cols=key_cols, base_gen=int(meta.get("generation", -1)),
+            )
+            return len(files)
+        df = self.read(table)
         n_rows = df.count()
         n_out = max(
             min_output_files,
             (n_rows + target_file_rows - 1) // target_file_rows,
             1,
         )
-        if meta.get("generations") is not None:
-            # bucketed layout: recompute the bucket id from the persisted
-            # key columns and republish every bucket as a new generation
-            # (same crash-safe commit as a merge)
-            key_cols = meta["key_cols"]
-            n_buckets = int(meta["key_bucket_count"])
-            bucket_expr = F.pmod(
-                F.hash(*[F.col(c) for c in key_cols]), F.lit(n_buckets)
-            )
-            out = df.withColumn("__bucket", bucket_expr).repartition(n_out, "__bucket")
-            tmp = self.path(f".tmp_{table}_{uuid.uuid4().hex[:8]}")
-            self._sorted_within(out, spec).write.mode("overwrite").partitionBy(
-                "__bucket"
-            ).parquet(tmp)
-            self._commit_bucket_generations(
-                table, tmp, list(range(n_buckets)), n_buckets=n_buckets,
-                key_cols=key_cols, base_gen=int(meta.get("generation", -1)),
-            )
-            return len(files)
         part_cols = [spec.partition_col] if spec.partition_col else []
         # write directly (not via overwrite(), which would recompute
         # partition columns) so stored values stay byte-stable
@@ -4692,8 +4761,10 @@ class Warehouse:
         this compaction loudly rather than losing its updates, and the
         post-commit hook refreshes every recorded index incrementally).
         Untouched buckets keep their generation pointers: cost is
-        O(selected buckets), never O(table). Returns the bucket ids
-        rewritten."""
+        O(selected buckets), never O(table). Every generation written
+        through ``_write_bucket_generations`` is already one file, so
+        this finds work only in generations written before it (or by
+        another writer). Returns the bucket ids rewritten."""
         meta = self.layout_meta(table)
         gens = meta.get("generations")
         if gens is None:
@@ -4718,18 +4789,11 @@ class Warehouse:
         base_gen = int(meta.get("generation", -1))
         paths = [self._bucket_gen_dir(table, str(b), gens[str(b)]) for b in plan]
         df = self._read_stored(paths, meta)
-        bucket_expr = F.pmod(
-            F.hash(*[F.col(c) for c in key_cols]), F.lit(n_buckets)
-        )
-        # one task per selected bucket (repartition on the bucket id):
-        # each bucket's generation coalesces to a single file
-        out = df.withColumn("__bucket", bucket_expr).repartition(
-            max(len(plan), 1), "__bucket"
-        )
+        bucket_expr = bucket_column(key_cols, n_buckets)
         tmp = self.path(f".tmp_{table}_{uuid.uuid4().hex[:8]}")
-        self._sorted_within(out, spec).write.mode("overwrite").partitionBy(
-            "__bucket"
-        ).parquet(tmp)
+        self._write_bucket_generations(
+            df.withColumn("__bucket", bucket_expr), tmp, spec
+        )
         self._commit_bucket_generations(
             table, tmp, plan, n_buckets=n_buckets, key_cols=key_cols,
             base_gen=base_gen,

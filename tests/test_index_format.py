@@ -12,6 +12,8 @@ from __future__ import annotations
 import json
 import os
 
+from pyspark.sql import types as T
+
 from kafka_connect_bigquery_spark.sinks.warehouse import TableSpec, Warehouse
 
 PLAIN = TableSpec(partition_grain="NONE")
@@ -21,8 +23,6 @@ SCHEMAS = {
     ("_sketch", "index"): "struct<f:string,c:string,register:int,rho:int>",
     ("_text", "index"): "struct<f:string,c:string,tok:string>",
     ("_ann", "index"): "struct<f:string,list_id:int>",
-    # the codes build emits nid before list_id; marker-only frames use
-    # the declared order, and readers resolve columns by name
     ("_ann", "codes"): "struct<f:string,nid:bigint,list_id:int,codes:array<int>>",
 }
 
@@ -54,6 +54,14 @@ def _meta_text(wh, table, sub):
         return f.read()
 
 
+# declared DDL per index table: marker-only writes land in this order
+DDLS = {
+    (kind.subdir, t.name): t.ddl
+    for kind in Warehouse._INDEX_KINDS.values()
+    for t in kind.tables
+}
+
+
 def _check_tables(spark, wh, table, cols_by_table):
     """Schema and one marker per scanned (file, column) for every index
     table of ``table``; markers cover exactly the live files."""
@@ -62,6 +70,9 @@ def _check_tables(spark, wh, table, cols_by_table):
         d = os.path.join(wh.path(table), sub, name)
         df = spark.read.parquet(d)
         assert df.schema.simpleString() == SCHEMAS[(sub, name)], (sub, name)
+        # data-bearing and marker-only files share one column order
+        ddl_names = T.StructType.fromDDL(DDLS[(sub, name)]).names
+        assert ddl_names == df.schema.names, (sub, name, ddl_names)
         is_marker, tail = MARKERS[(sub, name)]
         rows = [r.asDict() for r in df.filter(is_marker).collect()]
         keys = sorted(

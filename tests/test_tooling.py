@@ -55,3 +55,47 @@ def test_bench_summary_skips_an_entry_that_overflows_and_keeps_adding():
     # add-only: q1 keeps its value; the long key is skipped, q2 still fits
     assert summary["queries"] == {"q1": 1.0, "q2": 3.0}
     assert len(json.dumps(summary, separators=(",", ":"))) <= budget
+
+
+def _bucket_partition_writers(path: str) -> list[str]:
+    """``file:function`` for every ``partitionBy("__bucket")`` call in
+    one source file, by the innermost enclosing function."""
+    import ast
+
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    hits = []
+
+    def visit(node, func):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "partitionBy"
+            and any(
+                isinstance(a, ast.Constant) and a.value == "__bucket"
+                for a in node.args
+            )
+        ):
+            hits.append(f"{os.path.basename(path)}:{func}")
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(tree, None)
+    return hits
+
+
+def test_bucket_generations_have_one_writer():
+    """Every bucket generation is written by
+    ``Warehouse._write_bucket_generations``, which repartitions on the
+    bucket id first so each generation is one file; a second
+    ``partitionBy("__bucket")`` writer would bring back several files
+    per bucket and slow key-bucket point reads."""
+    pkg = os.path.join(conftest.REPO, "kafka_connect_bigquery_spark")
+    hits = []
+    for root, _, names in os.walk(pkg):
+        for name in names:
+            if name.endswith(".py"):
+                hits += _bucket_partition_writers(os.path.join(root, name))
+    assert hits == ["warehouse.py:_write_bucket_generations"]

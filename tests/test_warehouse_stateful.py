@@ -53,6 +53,9 @@ class WarehouseMachine(RuleBasedStateMachine):
         self.commit_ts: dict[int, float] = {}
         self.created = False
         self.indexed = False
+        # point-read probe: one key per step, cycling through the
+        # keyspace so present, deleted and never-written keys all occur
+        self.probe = 0
 
     def _committed(self):
         gen = int(self.wh.layout_meta("t")["generation"])
@@ -67,6 +70,13 @@ class WarehouseMachine(RuleBasedStateMachine):
 
         self.commit_ts[gen] = _time.time()
         self.created = True
+
+    def _one_file_per_generation(self):
+        """Every live generation dir is ONE data file: the bucket writer
+        repartitions on the bucket id before ``partitionBy``."""
+        for b, g in self.wh.layout_meta("t")["generations"].items():
+            files = self.wh._data_files(self.wh._bucket_gen_dir("t", b, g))
+            assert len(files) == 1, f"bucket {b} gen {g}: {len(files)} files"
 
     def _apply_merge(self, batch, with_extra, with_extra2=False, null_tomb=False):
         # base schema carries a derived TEXT column s = "w<v> c<v%3> blue"
@@ -111,6 +121,7 @@ class WarehouseMachine(RuleBasedStateMachine):
         if with_extra2:
             self.evolved2 = True
         self._committed()
+        self._one_file_per_generation()
 
     @rule(batch=_batch)
     def merge(self, batch):
@@ -146,6 +157,7 @@ class WarehouseMachine(RuleBasedStateMachine):
     def compact(self):
         if self.wh.compact("t", SPEC, target_file_rows=4, min_files=1):
             self._committed()
+            self._one_file_per_generation()
 
     @precondition(lambda self: self.created)
     @rule()
@@ -249,6 +261,19 @@ class WarehouseMachine(RuleBasedStateMachine):
                 assert col in df.columns, f"evolved column {col} lost"
                 got_c = {r["k"]: r[col] for r in df.select("k", col).collect()}
                 assert got_c == want, f"evolved column {col} values diverged"
+
+    @invariant()
+    def key_point_read_matches_model(self):
+        """``read_pruned_where`` on the key prunes to the key's bucket
+        (or reads nothing when that bucket is empty) and must still
+        return exactly the model's row for that key."""
+        if not self.created:
+            return
+        key = self.probe % 10
+        self.probe += 1
+        rows = self.wh.read_pruned_where("t", {"k": key}).select("k", "v").collect()
+        want = [(key, self.model[key])] if key in self.model else []
+        assert [(r["k"], r["v"]) for r in rows] == want, f"point read of k={key}"
 
     @precondition(lambda self: self.created)
     @rule()
