@@ -120,11 +120,23 @@ def apply_rollup_delta(
     return out.filter(F.col(count_measure) > 0)
 
 
-def cdc_span(warehouse, source: str, from_version: int, to_version: int, feed=None) -> DataFrame:
+def cdc_span(
+    warehouse, source: str, from_version: int, to_version: int, feed=None
+) -> DataFrame | None:
     """The ``images="both"`` CDC span a maintainer applies: taken from
     the shared ``feed`` (a ``ChangeFeed``, streaming/pipeline.py) when
     given, read from the warehouse otherwise. Raises ``WarehouseError``
-    when the ``from_version`` snapshot has been pruned."""
+    when the ``from_version`` snapshot has been pruned.
+
+    Returns ``None`` — rebuild instead — when the span rewrote every
+    bucket live at ``to_version`` (``Warehouse.bucket_diff``). The feed
+    then reads every live bucket at both versions and joins them, while
+    a rebuild reads only the newer side and aggregates it: a sub-plan
+    of the delta plan at any table size, so no threshold is needed.
+    Nothing is read and no feed frame is built for such a span."""
+    diff = warehouse.bucket_diff(source, from_version, to_version)
+    if diff.rewrote_every_live_bucket:
+        return None
     if feed is not None:
         return feed.changes(source, from_version, to_version)
     return warehouse.read_changes(
@@ -147,12 +159,17 @@ class RollupMaintainer:
     pruned (consumer lagged past snapshot_retention), refresh falls
     back to a full rebuild — correct, just not incremental. Any other
     failure propagates: a silent rebuild would hide a broken delta path
-    behind O(source) work on every batch.
+    behind O(source) work on every batch. A span that rewrote every
+    live source bucket also rebuilds (``cdc_span`` returns ``None``):
+    there the rebuild reads a subset of what the delta path reads.
+    Every rebuild reads the source at the cursor's version, so a merge
+    that commits during the refresh is applied by the next one, once.
 
     The CDC span comes from a shared ``ChangeFeed``
     (streaming/pipeline.py) when the caller passes one — the streaming
-    MERGE pipeline does, so its maintainers pay one CDC pass per batch —
-    and from ``Warehouse.read_changes`` otherwise.
+    MERGE pipeline does, so its maintainers pay one CDC pass per batch,
+    zero when the batch rewrote every live bucket — and from
+    ``Warehouse.read_changes`` otherwise.
     """
 
     CURSOR_KEY = "rollup_applied_version"
@@ -174,8 +191,10 @@ class RollupMaintainer:
         self.measures = measures
         self.count_measure = count_measure
 
-    def _rebuild(self) -> DataFrame:
-        return build_rollup(self.wh.read(self.source), self.keys, self.measures)
+    def _rebuild(self, version: int) -> DataFrame:
+        return build_rollup(
+            self.wh.read(self.source, version=version), self.keys, self.measures
+        )
 
     def refresh(self, feed=None) -> int:
         """Bring the rollup up to the source's current generation.
@@ -192,24 +211,22 @@ class RollupMaintainer:
         last = self.wh.table_property(self.table, self.CURSOR_KEY)
         if last is not None and int(last) == cur:
             return 0
-        if last is None:
-            out = self._rebuild()
-        else:
+        changes = None
+        if last is not None:
             try:
                 changes = cdc_span(self.wh, self.source, int(last), cur, feed)
             except WarehouseError:
-                # cursor snapshot pruned (lagged past retention)
-                out = self._rebuild()
-            else:
-                delta = rollup_delta(changes, self.keys, self.measures)
-                # project the stored state onto keys + measures: rollups
-                # written by older releases carry an ingestion-date column
-                stored = self.wh.read(self.table).select(
-                    *self.keys, *self.measures
-                )
-                out = apply_rollup_delta(
-                    stored, delta, self.keys, count_measure=self.count_measure
-                )
+                pass  # cursor snapshot pruned (lagged past retention)
+        if changes is None:
+            out = self._rebuild(cur)
+        else:
+            delta = rollup_delta(changes, self.keys, self.measures)
+            # project the stored state onto keys + measures: rollups
+            # written by older releases carry an ingestion-date column
+            stored = self.wh.read(self.table).select(*self.keys, *self.measures)
+            out = apply_rollup_delta(
+                stored, delta, self.keys, count_measure=self.count_measure
+            )
         # no materialization first: overwrite runs the plan once, into a
         # scratch dir, before it swaps out (and retains) the old rollup
         # files the plan reads. Explicit NONE grain: a partition column

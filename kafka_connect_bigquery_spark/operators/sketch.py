@@ -866,7 +866,11 @@ class SketchMaintainer:
     lost a contribution rebuild from only the affected groups). A
     pruned cursor snapshot (consumer lagged past snapshot_retention)
     falls back to a full rebuild — correct, just not incremental; any
-    other failure propagates. Like the rollup maintainer, ``refresh``
+    other failure propagates. A span that rewrote every live source
+    bucket rebuilds too, without building the feed (``rollup.cdc_span``
+    returns ``None``): the rebuild reads a subset of the delta path's
+    reads. Rebuilds and the ``current`` input read the source at the
+    cursor's version. Like the rollup maintainer, ``refresh``
     takes the CDC span from a shared ``ChangeFeed`` when given one
     (the streaming pipeline passes one per micro-batch) and reads it
     itself otherwise.
@@ -909,8 +913,8 @@ class SketchMaintainer:
         self.hi = hi
         self.nbins = nbins
 
-    def _rebuild(self) -> DataFrame:
-        src = self.wh.read(self.source)
+    def _rebuild(self, version: int) -> DataFrame:
+        src = self.wh.read(self.source, version=version)
         if self.kind == "hll":
             return hll_build_grouped(src, self.col, self.group_cols, p=self.p)
         if self.kind == "cm":
@@ -939,39 +943,41 @@ class SketchMaintainer:
         last = self.wh.table_property(self.table, self.CURSOR_KEY)
         if last is not None and int(last) == cur:
             return 0
-        if last is None:
-            out = self._rebuild()
-        else:
+        changes = None
+        if last is not None:
             try:
                 changes = cdc_span(self.wh, self.source, int(last), cur, feed)
             except WarehouseError:
-                # cursor snapshot pruned (lagged past retention)
-                out = self._rebuild()
+                pass  # cursor snapshot pruned (lagged past retention)
+        if changes is None:
+            out = self._rebuild(cur)
+        else:
+            stored = self.wh.read(self.table)
+            # at the cursor's version, like the rebuild: a merge that
+            # commits meanwhile belongs to the next refresh's span
+            current = self.wh.read(self.source, version=cur)
+            if self.kind == "hll":
+                out = hll_maintain_grouped(
+                    stored, changes, self.col, self.group_cols,
+                    current=current, p=self.p,
+                )
+            elif self.kind == "cm":
+                # linear sketch: no rebuild path, `current` unused
+                out = count_min_maintain_grouped(
+                    stored, changes, self.col, self.group_cols,
+                    depth=self.depth, width=self.width,
+                )
+            elif self.kind == "hist":
+                # linear sketch: no rebuild path, `current` unused
+                out = hist_maintain_grouped(
+                    stored, changes, self.col, self.group_cols,
+                    lo=self.lo, hi=self.hi, nbins=self.nbins,
+                )
             else:
-                stored = self.wh.read(self.table)
-                current = self.wh.read(self.source)
-                if self.kind == "hll":
-                    out = hll_maintain_grouped(
-                        stored, changes, self.col, self.group_cols,
-                        current=current, p=self.p,
-                    )
-                elif self.kind == "cm":
-                    # linear sketch: no rebuild path, `current` unused
-                    out = count_min_maintain_grouped(
-                        stored, changes, self.col, self.group_cols,
-                        depth=self.depth, width=self.width,
-                    )
-                elif self.kind == "hist":
-                    # linear sketch: no rebuild path, `current` unused
-                    out = hist_maintain_grouped(
-                        stored, changes, self.col, self.group_cols,
-                        lo=self.lo, hi=self.hi, nbins=self.nbins,
-                    )
-                else:
-                    out = kmv_maintain_grouped(
-                        stored, changes, self.col, self.group_cols,
-                        current=current, k=self.k,
-                    )
+                out = kmv_maintain_grouped(
+                    stored, changes, self.col, self.group_cols,
+                    current=current, k=self.k,
+                )
         # no materialization first: overwrite runs the plan once, into a
         # scratch dir, before it swaps out (and retains) the old sketch
         # files the plan reads. Explicit NONE grain: a register table

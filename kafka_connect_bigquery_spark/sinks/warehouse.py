@@ -192,6 +192,27 @@ class _IndexKind:
     tables: tuple[_IndexTable, ...]
 
 
+@dataclass(frozen=True)
+class _BucketDiff:
+    """The manifest diff between two versions of a bucketed table:
+    both manifests and the buckets whose generation moved (written,
+    emptied or created) between them."""
+
+    old: dict
+    new: dict
+    changed: list[str]
+
+    @property
+    def rewrote_every_live_bucket(self) -> bool:
+        """Every bucket live at the newer version was rewritten in the
+        span (vacuously true when the span emptied the table). A CDC
+        feed over such a span reads every live bucket at both versions,
+        so it reads a superset of what a rebuild at the newer version
+        reads."""
+        changed = set(self.changed)
+        return all(b in changed for b in self.new.get("generations") or {})
+
+
 class Warehouse:
     """A directory of partitioned parquet tables with evolution.
 
@@ -1471,6 +1492,28 @@ class Warehouse:
         extras = [F.col(c) for c in df.columns if c not in stored_names]
         return df.select(*cols, *extras)
 
+    def bucket_diff(
+        self, table: str, from_version: int, to_version: int | None = None
+    ) -> _BucketDiff:
+        """The manifest diff of a bucketed table between two snapshot
+        versions (``to_version=None``: the live manifest): the buckets
+        whose generation moved, and whether that is every bucket live
+        at ``to_version`` (``rewrote_every_live_bucket``). Two small
+        JSON reads, no Spark job. Raises ``WarehouseError`` when a
+        snapshot has been pruned. :meth:`read_changes` reads exactly the
+        ``changed`` buckets, and the IVM maintainers use the flag to
+        skip the feed when a rebuild reads less."""
+        old = self._snapshot_meta(table, from_version)
+        new = (
+            self._snapshot_meta(table, to_version)
+            if to_version is not None
+            else self.layout_meta(table)
+        )
+        og = old.get("generations") or {}
+        ng = new.get("generations") or {}
+        changed = [b for b in set(og) | set(ng) if og.get(b) != ng.get(b)]
+        return _BucketDiff(old=old, new=new, changed=changed)
+
     def read_changes(
         self,
         table: str,
@@ -1491,30 +1534,28 @@ class Warehouse:
         values), so a downstream incremental aggregate can subtract the
         old contribution and add the new one (operators/rollup.py).
 
-        Scale: the manifest diff names exactly the buckets whose
-        generation moved, so only those buckets are read at either
-        version — change detection cost follows the write rate, not the
-        table size (the Delta/Iceberg incremental-scan idea on the
-        one-file log). Both sides read with the newer manifest's schema
-        (``_read_stored``), so building the feed starts no Spark job.
+        Scale: the manifest diff (:meth:`bucket_diff`) names exactly
+        the buckets whose generation moved, so only those buckets are
+        read at either version — change detection cost follows the
+        write rate, not the table size (the Delta/Iceberg
+        incremental-scan idea on the one-file log). Both sides read with
+        the newer manifest's schema (``_read_stored``), so building the
+        feed starts no Spark job.
 
         Several consumers of one span should share one frame: the
         streaming pipeline's ``ChangeFeed`` (streaming/pipeline.py)
         builds this feed once per micro-batch and caches it for every
-        IVM maintainer of the table.
+        IVM maintainer of the table. The maintainers do not ask for it
+        when the span rewrote every live bucket: a rebuild then reads
+        only the newer side of this feed's reads.
         """
-        old = self._snapshot_meta(table, from_version)
-        new = (
-            self._snapshot_meta(table, to_version)
-            if to_version is not None
-            else self.layout_meta(table)
-        )
+        diff = self.bucket_diff(table, from_version, to_version)
+        old, new, changed = diff.old, diff.new, diff.changed
         key_cols = list(new.get("key_cols") or old.get("key_cols") or [])
         if not key_cols:
             raise WarehouseError(f"table {table} has no bucketed key columns")
         og = dict(old.get("generations") or {})
         ng = dict(new.get("generations") or {})
-        changed = [b for b in set(og) | set(ng) if og.get(b) != ng.get(b)]
 
         def _side_paths(gens: dict[str, object]) -> list[str]:
             return [
@@ -4387,7 +4428,9 @@ class Warehouse:
         partition layout and clustering sort. A bucketed MERGE table
         rewrites to one file per bucket, whatever ``target_file_rows``.
 
-        Returns the number of files before compaction (0 = skipped).
+        Returns the number of live files before compaction (0 =
+        skipped). A bucketed table is skipped unless some live
+        generation holds at least ``min_files`` files.
         At scale this runs per-partition on a schedule — that form is
         :meth:`compact_partition` (O(partition) rewrite, delta commit,
         no dir swap); this whole-table form is for small tables and
@@ -4400,20 +4443,23 @@ class Warehouse:
         # captured BEFORE anything is listed or read (see the commit
         # check below); bucketed tables carry their own base generation
         base_versions = self._oplog_len(table)
-        files = self._data_files(self.path(table))
-        if len(files) < min_files:
-            return 0
-        # one manifest read resolves BOTH the input paths and the base
-        # generation for the commit check — reading them separately
-        # would let a concurrent merge slip between the two
+        # one manifest read resolves the live files, the input paths and
+        # the base generation for the commit check — reading them
+        # separately would let a concurrent merge slip between them
         meta = self.layout_meta(table)
         if meta.get("generations") is not None:
-            paths = [
-                self._bucket_gen_dir(table, b, g)
-                for b, g in meta["generations"].items()
-            ]
-            if not paths:  # every key deleted — nothing to compact
-                return 0
+            # the manifest's live files only: superseded generations
+            # that retained snapshots keep on disk are not the table
+            per_gen = {
+                path: len(self._data_files(path))
+                for path in (
+                    self._bucket_gen_dir(table, b, g)
+                    for b, g in meta["generations"].items()
+                )
+            }
+            if not per_gen or max(per_gen.values()) < min_files:
+                return 0  # every key deleted, or no generation to merge
+            paths = list(per_gen)
             # conform so the compacted files CARRY manifest-only evolved
             # columns (self-healing: after compaction the footers and
             # the logical schema agree again)
@@ -4433,7 +4479,10 @@ class Warehouse:
                 table, tmp, list(range(n_buckets)), n_buckets=n_buckets,
                 key_cols=key_cols, base_gen=int(meta.get("generation", -1)),
             )
-            return len(files)
+            return sum(per_gen.values())
+        files = self._data_files(self.path(table))
+        if len(files) < min_files:
+            return 0
         df = self.read(table)
         n_rows = df.count()
         n_out = max(

@@ -74,7 +74,10 @@ class ChangeFeed:
     manifest-diff join inside its own job and fills the cache, and the
     others read the cached rows. Maintainers attached to one table
     share a cursor in steady state, so one batch costs one CDC pass
-    instead of one per maintainer. ``release()`` unpersists every span;
+    instead of one per maintainer — and zero when the batch rewrote
+    every live bucket of the table: the maintainers then rebuild
+    without asking for the span (``rollup.cdc_span``), so it is never
+    built. ``release()`` unpersists every span;
     ``SinkPipeline.merge_batch`` calls it when the batch ends."""
 
     def __init__(self, warehouse: Warehouse) -> None:

@@ -125,6 +125,24 @@ def test_compact_preserves_bucket_layout(spark, tmp_path):
     assert (1, "post") in _state(wh, "t")
 
 
+def test_compact_skips_a_bucketed_table_that_is_already_compact(spark, tmp_path):
+    """Every merge writes one file per bucket, so the live table is
+    already compact: superseded generations that retained snapshots
+    keep on disk neither trigger a rewrite nor count as files."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    for batch in range(3):
+        b = _mk(spark, [(k, f"v{k}_{batch}", batch * 100 + k, False) for k in range(20)])
+        wh.merge(b, "t", ["k"], mode="upsert", spec=SPEC)
+    gen = wh.layout_meta("t")["generation"]
+    plain = TableSpec(partition_grain="NONE")
+    assert [wh.compact("t", plain) for _ in range(3)] == [0, 0, 0]
+    assert wh.layout_meta("t")["generation"] == gen
+    # min_files=1 still rewrites, and counts only the live files
+    live = len(_bucket_gens(wh, "t"))
+    assert wh.compact("t", plain, min_files=1) == live
+    assert wh.layout_meta("t")["generation"] == gen + 1
+
+
 def test_bucketed_matches_unbucketed(spark, tmp_path):
     """Same batches through bucketed and plain layouts give identical
     final states."""

@@ -1,7 +1,9 @@
 """The bucketed MERGE + IVM read path: generation dirs read with the
 manifest schema (no footer-merge job), one shared CDC feed per
-micro-batch for every maintainer of a table, and maintainers that stay
-incremental after their first refresh."""
+micro-batch for every maintainer of a table, maintainers that stay
+incremental after their first refresh while a span leaves a live bucket
+unchanged, rebuild without the feed when it rewrote every live bucket,
+and read the source at the version their cursor records."""
 
 from __future__ import annotations
 
@@ -208,6 +210,10 @@ def test_maintainer_never_rebuilds_after_first_refresh(spark, tmp_path, monkeypa
             ]),
             "t", ["k"], mode="upsert_delete", order_col="i", spec=SPEC,
         )
+        # the span leaves a live bucket unchanged, so it takes the delta
+        # path (a span that rewrote every live bucket rebuilds by design)
+        v = wh.layout_meta("t")["generation"]
+        assert not wh.bucket_diff("t", v - 1, v).rewrote_every_live_bucket
         assert m.refresh() == 1
     assert wh.layout_meta("t_agg").get("generations") is None
     assert wh.read("t_agg").columns == (
@@ -220,6 +226,101 @@ def test_maintainer_never_rebuilds_after_first_refresh(spark, tmp_path, monkeypa
     else:
         want = SK.hll_build_grouped(wh.read("t"), "k", ["g"])
         assert _hll_rows(wh.read("t_agg")) == _hll_rows(want)
+
+
+def _maintainer(wh, kind, table):
+    if kind == "rollup":
+        return R.RollupMaintainer(wh, "t", table, ["g"], _measures(), count_measure="n")
+    if kind == "hist":
+        return SK.SketchMaintainer(
+            wh, "t", table, "v", ["g"], kind="hist", lo=0.0, hi=100.0, nbins=8
+        )
+    return SK.SketchMaintainer(wh, "t", table, "k", ["g"], kind=kind)
+
+
+def _merge(spark, wh, rows):
+    wh.merge(_mk(spark, rows), "t", ["k"], mode="upsert_delete", order_col="i", spec=SPEC)
+    return wh.layout_meta("t")["generation"]
+
+
+def _poisoned(*args, **kwargs):
+    raise AssertionError("a span that rewrote every live bucket built the CDC feed")
+
+
+# keys 0-8 fill buckets 0 (2, 4, 5, 8), 1 (0, 1, 6) and 3 (3, 7); key 14
+# falls in bucket 2
+_BASE_ROWS = [(k, "abc"[k % 3], k, 0, False) for k in range(9)]
+# Spark jobs a rebuild starts: one per shuffle plus the write. KMV has two
+# shuffles (distinct, then the per-group top-k window)
+_REBUILD_JOBS = {"rollup": 2, "hll": 2, "kmv": 3, "cm": 2, "hist": 2}
+
+
+def test_span_that_rewrote_every_live_bucket_rebuilds_without_the_feed(
+    spark, tmp_path, monkeypatch
+):
+    """The refresh of a span that rewrote every live source bucket
+    builds no CDC feed: every kind of maintainer rebuilds at the span's
+    end version in the rebuild's own few Spark jobs. Two such spans: a
+    lagging one of two merges that each leave a live bucket alone, and
+    an all-tombstone batch that empties the table."""
+    wh = Warehouse(spark, str(tmp_path / "wh"), snapshot_retention=4)
+    v0 = _merge(spark, wh, _BASE_ROWS)
+    ms = [_maintainer(wh, kind, f"t_{kind}") for kind in _REBUILD_JOBS]
+    for m in ms:
+        m.refresh()
+    spans = [
+        # together: buckets 0, 1 and 3 rewritten, bucket 2 created
+        [[(2, "b", 50, 1, False), (1, None, None, 1, True)],
+         [(3, "d", 60, 2, False), (14, "a", 70, 2, False)]],
+        [[(k, None, None, 3, True) for k in (0, 2, 3, 4, 5, 6, 7, 8, 14)]],
+    ]
+    for merges in spans:
+        for rows in merges:
+            v1 = _merge(spark, wh, rows)
+            assert wh.bucket_diff("t", v1 - 1, v1).rewrote_every_live_bucket == (
+                len(merges) == 1
+            )
+        assert wh.bucket_diff("t", v0, v1).rewrote_every_live_bucket
+        with monkeypatch.context() as mp:
+            mp.setattr(Warehouse, "read_changes", _poisoned)
+            mp.setattr(ChangeFeed, "changes", _poisoned)
+            feed = ChangeFeed(wh)
+            for kind, m in zip(_REBUILD_JOBS, ms):
+                n0 = _jobs_started(spark)
+                assert m.refresh(feed=feed) == v1 - v0
+                assert _jobs_started(spark) - n0 <= _REBUILD_JOBS[kind], kind
+        for m in ms:
+            assert wh.table_property(m.table, m.CURSOR_KEY) == v1
+            assert _rows(wh.read(m.table)) == _rows(m._rebuild(v1)), m.table
+        v0 = v1
+    assert not wh.layout_meta("t")["generations"]
+    assert all(wh.read(m.table).isEmpty() for m in ms)
+
+
+def test_refresh_reads_the_source_at_the_cursor_version(spark, tmp_path, monkeypatch):
+    """A merge that commits between the refresh's cursor read and its
+    source read belongs to the next span: the first refresh's rebuild
+    must not see it, or the next refresh applies it a second time."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    _merge(spark, wh, _BASE_ROWS)
+    m = _maintainer(wh, "rollup", "t_agg")
+    real = Warehouse.table_property
+    raced = []
+
+    def racing(self, table, key, default=None):
+        if table == "t_agg" and not raced:
+            raced.append(True)
+            # an insert into bucket 1 only: the next span takes the
+            # delta path
+            _merge(spark, wh, [(22, "a", 5, 1, False)])
+        return real(self, table, key, default)
+
+    monkeypatch.setattr(Warehouse, "table_property", racing)
+    assert m.refresh() == 1
+    monkeypatch.undo()
+    assert raced
+    assert m.refresh() == 1
+    assert _rows(wh.read("t_agg")) == _rows(m._rebuild(wh.layout_meta("t")["generation"]))
 
 
 def test_rollup_heals_a_table_written_with_a_partition_column(spark, tmp_path):
@@ -283,7 +384,9 @@ def test_merge_batch_shares_one_cdc_pass_and_reports_metrics(spark, tmp_path, mo
     )
     pipe.merge_batch(
         _kafka_batch(spark, [
-            (f"u{k}", {"row": k, "name": "ab"[k % 2]}, k) for k in range(6)
+            # u7 fills bucket 0, which the second batch leaves alone: a
+            # batch that rewrote every live bucket would rebuild instead
+            (f"u{k}", {"row": k, "name": "ab"[k % 2]}, k) for k in range(8)
         ]),
         0, key_cols=["kkey"],
     )

@@ -99,3 +99,44 @@ def test_bucket_generations_have_one_writer():
             if name.endswith(".py"):
                 hits += _bucket_partition_writers(os.path.join(root, name))
     assert hits == ["warehouse.py:_write_bucket_generations"]
+
+
+_WAREHOUSE_NAMES = ("wh", "warehouse")
+
+
+def _private_warehouse_calls(path: str) -> list[str]:
+    """``file:line attr`` for every call of a ``_``-prefixed attribute on
+    a warehouse object (``wh``/``warehouse``, bare or as an attribute
+    such as ``self.wh``) in one source file."""
+    import ast
+
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    hits = []
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            continue
+        attr, owner = node.func.attr, node.func.value
+        name = (
+            owner.id if isinstance(owner, ast.Name)
+            else owner.attr if isinstance(owner, ast.Attribute)
+            else None
+        )
+        if name in _WAREHOUSE_NAMES and attr.startswith("_") and not attr.startswith("__"):
+            hits.append(f"{os.path.relpath(path, conftest.REPO)}:{node.lineno} {attr}")
+    return hits
+
+
+def test_no_private_warehouse_calls_outside_sinks():
+    """Manifest and file-layout knowledge stays behind ``Warehouse``'s
+    public methods: no module outside ``sinks/`` calls a private one."""
+    pkg = os.path.join(conftest.REPO, "kafka_connect_bigquery_spark")
+    sinks = os.path.join(pkg, "sinks")
+    hits = []
+    for root, _, names in os.walk(pkg):
+        if os.path.commonpath([root, sinks]) == sinks:
+            continue
+        for name in names:
+            if name.endswith(".py"):
+                hits += _private_warehouse_calls(os.path.join(root, name))
+    assert hits == []
